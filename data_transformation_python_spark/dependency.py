@@ -241,20 +241,51 @@ class ParallelExecutor:
                     "spark.scheduler.pool", None
                 )
 
-    def execute_levels(self, levels: list[list[str]], run_fn) -> list[dict]:
+    def execute_levels(
+        self,
+        levels: list[list[str]],
+        run_fn,
+        graph: DependencyGraph | None = None,
+    ) -> list[dict]:
+        """Run ``levels`` in order, each level's models concurrently.
+
+        With a ``graph``, a model whose upstream failed is not run: it
+        and every transitive dependent get ``{"success": False,
+        "skipped": True, "error": "upstream <m> failed"}`` (``m`` the
+        model that failed), so nothing builds on a table its upstream
+        did not refresh."""
         results: list[dict] = []
+        # failed or skipped model -> the model whose failure stopped it
+        cause: dict[str, str] = {}
         for level in levels:
+            runnable = []
+            for name in level:
+                upstream = graph.nodes[name].dependencies if graph else set()
+                bad = sorted(upstream & cause.keys())
+                if bad:
+                    cause[name] = cause[bad[0]]
+                    results.append(
+                        {
+                            "model": name,
+                            "success": False,
+                            "skipped": True,
+                            "error": f"upstream {cause[name]} failed",
+                        }
+                    )
+                else:
+                    runnable.append(name)
             with ThreadPoolExecutor(max_workers=self.max_parallelism) as pool:
                 futures = {
                     pool.submit(self._run_in_pool, name, run_fn): name
-                    for name in level
+                    for name in runnable
                 }
                 for fut in as_completed(futures):
                     name = futures[fut]
                     try:
-                        results.append(fut.result())
+                        result = fut.result()
                     except Exception as e:  # graceful degradation G17
-                        results.append(
-                            {"model": name, "success": False, "error": str(e)}
-                        )
+                        result = {"model": name, "success": False, "error": str(e)}
+                    if not result.get("success"):
+                        cause[name] = name
+                    results.append(result)
         return results

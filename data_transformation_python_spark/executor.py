@@ -21,6 +21,7 @@ Reference mapping:
 from __future__ import annotations
 
 import re
+import threading
 import time
 from pathlib import Path
 
@@ -122,6 +123,7 @@ class ModelExecutor:
         self.fail_fast = fail_fast
         self._file_cache: dict[str, Path] = {}
         self._registered_sources: set[str] = set()
+        self._source_lock = threading.Lock()
 
     # -- model file resolution (reference: executor.py:262-326) --------
     def find_model_file(self, name: str) -> Path:
@@ -154,28 +156,43 @@ class ModelExecutor:
     # -- source registration -------------------------------------------
     @staticmethod
     def _nanos_ts_columns(path: str) -> list[str]:
-        """Names of TIMESTAMP(NANOS) columns in a parquet source, from
-        the arrow footer schema (Spark can't read that logical type
-        natively — it either throws or, under
+        """Names of top-level TIMESTAMP(NANOS) columns in a parquet
+        source, from the parquet footer of its first file (Spark can't
+        read that logical type natively — it either throws or, under
         ``spark.sql.legacy.parquet.nanosAsLong``, surfaces epoch-nanos
-        BIGINT).  Empty on probe failure or non-nanos vintages."""
+        BIGINT).  Classified from the parquet schema, not the arrow
+        one: arrow also maps the INT96 physical type (Spark's default
+        timestamp encoding, which Spark reads as TIMESTAMP) to
+        ``timestamp[ns]``.  Empty on probe failure or non-nanos
+        vintages."""
         try:
-            import pyarrow as pa
-            import pyarrow.dataset as ds
+            import json
 
-            schema = ds.dataset(path, format="parquet").schema
-            return [
-                f.name
-                for f in schema
-                if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-            ]
+            import pyarrow.dataset as ds
+            import pyarrow.parquet as pq
+
+            pf = pq.ParquetFile(ds.dataset(path, format="parquet").files[0])
+            top = set(pf.schema_arrow.names)
+            out = []
+            for i in range(len(pf.schema)):
+                col = pf.schema.column(i)
+                lt = json.loads(col.logical_type.to_json())
+                if (
+                    col.path in top
+                    and lt.get("Type") == "Timestamp"
+                    and lt.get("timeUnit") == "nanoseconds"
+                ):
+                    out.append(col.name)
+            return out
         except Exception:
             return []
 
     def _source_relation(self, source: str, table: str) -> str:
         """Resolve a source to a readable relation.  File-backed
         sources are registered as *external tables* (not temp views, so
-        permanent views materialized on top remain valid).
+        permanent views materialized on top remain valid), once per
+        executor: the models of a level resolve sources from parallel
+        threads, so registration runs under a lock.
 
         Vintage normalization: parquet sources holding TIMESTAMP(NANOS)
         columns (which Spark reads as epoch-nanos BIGINT under
@@ -188,68 +205,67 @@ class ModelExecutor:
         if st.path is None:
             return st.identifier
         rel = f"{self.executor.database}.__src_{source}_{table}"
-        if rel not in self._registered_sources:
-            spark = self.executor.spark
-            nanos_cols = (
-                self._nanos_ts_columns(st.path)
-                if st.format.lower() == "parquet"
-                else []
-            )
-            raw_rel = f"{rel}__raw" if nanos_cols else rel
-            # Source DEFINITIONS can evolve BETWEEN CLI invocations
-            # while the persistent metastore keeps the registration
-            # frozen — fingerprint the resolved PATH + format +
-            # options AND (for parquet) the full arrow footer schema
-            # (names AND types, so nanos↔micros vintage flips count
-            # as drift too) into TBLPROPERTIES and re-register on
-            # change.  The path is part of the signature because
-            # ${ENV}-substituted sources legitimately move between
-            # runs (staged/batched ingest); a schema-only signature
-            # silently kept reading the FIRST batch's files — caught
-            # by the pipeline_funnel_incremental gate.
-            # Re-registration drops BOTH possible objects under
-            # either name (a vintage flip also flips which name is
-            # the view and which the table).
-            import hashlib
-
-            ident = f"{st.path}|{st.format}|{sorted(st.options.items())}"
-            if st.format.lower() == "parquet":
-                try:
-                    import pyarrow.dataset as ds
-
-                    ident += "|" + str(
-                        ds.dataset(st.path, format="parquet").schema
-                    )
-                except Exception:
-                    pass
-            sig = hashlib.md5(ident.encode()).hexdigest()
-            stored = self._stored_source_sig(rel)
-            if stored is not None and stored != sig:
-                for name in (rel, f"{rel}__raw"):
-                    self._drop_table_or_view(name)
-            opts = ", ".join(
-                [f"path '{st.path}'"]
-                + [f"{k} '{v}'" for k, v in st.options.items()]
-            )
-            if nanos_cols:
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            props = f" TBLPROPERTIES ('dtps.source_sig' = '{sig}')" if sig else ""
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {raw_rel} USING {st.format} "
-                f"OPTIONS ({opts}){props}"
-            )
-            if nanos_cols:
-                cols = ", ".join(
-                    f"CAST(timestamp_micros(`{c}` div 1000) AS TIMESTAMP_NTZ) AS `{c}`"
-                    if c in nanos_cols
-                    else f"`{c}`"
-                    for c in spark.table(raw_rel).columns
-                )
-                spark.sql(
-                    f"CREATE OR REPLACE VIEW {rel} AS SELECT {cols} FROM {raw_rel}"
-                )
-            self._registered_sources.add(rel)
+        if rel in self._registered_sources:
+            return rel
+        with self._source_lock:
+            if rel not in self._registered_sources:
+                self._register_source(st, rel)
+                self._registered_sources.add(rel)
         return rel
+
+    def _register_source(self, st, rel: str) -> None:
+        spark = self.executor.spark
+        nanos_cols = (
+            self._nanos_ts_columns(st.path) if st.format.lower() == "parquet" else []
+        )
+        raw_rel = f"{rel}__raw" if nanos_cols else rel
+        # Source DEFINITIONS can evolve BETWEEN CLI invocations
+        # while the persistent metastore keeps the registration
+        # frozen — fingerprint the resolved PATH + format +
+        # options AND (for parquet) the full arrow footer schema
+        # (names AND types, so nanos↔micros vintage flips count
+        # as drift too) into TBLPROPERTIES and re-register on
+        # change.  The path is part of the signature because
+        # ${ENV}-substituted sources legitimately move between
+        # runs (staged/batched ingest); a schema-only signature
+        # silently kept reading the FIRST batch's files — caught
+        # by the pipeline_funnel_incremental gate.
+        # Re-registration drops BOTH possible objects under
+        # either name (a vintage flip also flips which name is
+        # the view and which the table).
+        import hashlib
+
+        ident = f"{st.path}|{st.format}|{sorted(st.options.items())}"
+        if st.format.lower() == "parquet":
+            try:
+                import pyarrow.dataset as ds
+
+                ident += "|" + str(ds.dataset(st.path, format="parquet").schema)
+            except Exception:
+                pass
+        sig = hashlib.md5(ident.encode()).hexdigest()
+        stored = self._stored_source_sig(rel)
+        if stored is not None and stored != sig:
+            for name in (rel, f"{rel}__raw"):
+                self._drop_table_or_view(name)
+        opts = ", ".join(
+            [f"path '{st.path}'"] + [f"{k} '{v}'" for k, v in st.options.items()]
+        )
+        if nanos_cols:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        props = f" TBLPROPERTIES ('dtps.source_sig' = '{sig}')" if sig else ""
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {raw_rel} USING {st.format} "
+            f"OPTIONS ({opts}){props}"
+        )
+        if nanos_cols:
+            cols = ", ".join(
+                f"CAST(timestamp_micros(`{c}` div 1000) AS TIMESTAMP_NTZ) AS `{c}`"
+                if c in nanos_cols
+                else f"`{c}`"
+                for c in spark.table(raw_rel).columns
+            )
+            spark.sql(f"CREATE OR REPLACE VIEW {rel} AS SELECT {cols} FROM {raw_rel}")
 
     def _stored_source_sig(self, rel: str) -> str | None:
         """The footer-schema fingerprint recorded when the source was

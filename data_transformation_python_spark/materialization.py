@@ -9,9 +9,13 @@ staging-table swap, since plain parquet tables cannot be mutated or
 overwritten while being read.
 
 Scale notes:
-- The staging swap writes the merged table twice (staging → target).
-  On a MERGE-capable catalog (Delta/Iceberg) the same strategies remap
-  to a single ``MERGE INTO``; the strategy interface keeps that door
+- The staging swap is one write plus a rename: the merged table is
+  written once into ``__stg_<table>``, the target is dropped and
+  staging is renamed into its place (a metastore update plus a
+  directory rename; on an object store without atomic rename the
+  rename is a copy, which costs no more than a second write).  On a
+  MERGE-capable catalog (Delta/Iceberg) the same strategies remap to
+  a single ``MERGE INTO``; the strategy interface keeps that door
   open without changing callers.
 - Incremental time/append only ever process the new slice; watermarks
   store observed ``max(time_column)`` (not wall clock — fixes the
@@ -160,19 +164,18 @@ class Materialization:
         return f"{db}.__stg_{tbl}" if db else f"__stg_{tbl}"
 
     def recover_orphaned_staging(
-        self, target: str, policy: str = "error", partition_by=None
+        self, target: str, policy: str = "error"
     ) -> str | None:
         """Janitor for a crashed previous swap: if a ``__stg_*`` table
-        for ``target`` still exists, a prior run died between writing
-        staging and completing the target rewrite — staging holds the
+        for ``target`` still exists, a prior run died after writing
+        staging and before renaming it into place — staging holds the
         only complete copy of that merge.  ``policy``:
 
         - ``error`` (default): refuse to proceed, naming both the
           recovery SQL and the opt-ins (a silent rebuild could lose
           the crashed merge's data).
-        - ``recover``: rewrite target from staging, then drop staging.
-          Idempotent for the post-rewrite/pre-drop crash window too
-          (staging content == target content there).
+        - ``recover``: publish staging as the target (drop the target
+          if it survived, rename staging into its place).
         - ``drop``: discard staging (caller asserts target is good).
 
         Returns the action taken, or None when no orphan exists."""
@@ -180,9 +183,7 @@ class Materialization:
         if not self.executor.table_exists(staging):
             return None
         if policy == "recover":
-            self._overwrite_table(target, self.spark.table(staging), partition_by)
-            self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
-            self.spark.catalog.refreshTable(target)
+            self._publish(staging, target)
             return "recovered"
         if policy == "drop":
             self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
@@ -190,41 +191,48 @@ class Materialization:
         raise MaterializationError(
             f"orphaned staging table {staging} found for {target}: a "
             f"previous merge crashed mid-swap and staging holds its only "
-            f"complete result. Recover with: INSERT OVERWRITE {target} "
-            f"SELECT * FROM {staging}, or set config "
-            f"on_orphaned_staging: recover|drop to resolve automatically."
+            f"complete result. Recover with: {self._recovery_sql(staging, target)}"
+            f", or set config on_orphaned_staging: recover|drop to resolve "
+            f"automatically."
         )
+
+    @staticmethod
+    def _recovery_sql(staging: str, target: str) -> str:
+        return (
+            f"DROP TABLE IF EXISTS {target}; "
+            f"ALTER TABLE {staging} RENAME TO {target}"
+        )
+
+    def _publish(self, staging: str, target: str) -> None:
+        """Replace ``target`` with the complete table ``staging``."""
+        self.spark.sql(f"DROP TABLE IF EXISTS {target}")
+        self.spark.sql(f"ALTER TABLE {staging} RENAME TO {target}")
 
     def _swap_in(
         self, target: str, df: DataFrame, partition_by=None, cluster_by=None
     ) -> None:
-        """Materialize ``df`` (which may read ``target``) via a staging
-        table, then rewrite target from staging.  Required because
-        vanilla Spark cannot overwrite a parquet table it is reading
+        """Materialize ``df`` (which may read ``target``) into a staging
+        table, then drop the target and rename staging into its place:
+        one write plus a rename.  Staging is required because vanilla
+        Spark cannot overwrite a parquet table it is reading
         (self-referential merge plans).
 
-        Recovery semantics: parquet overwrite of the target is NOT
-        atomic, so staging is dropped only after the target rewrite
-        succeeds — on a mid-write failure the staging table retains
-        the only complete copy of the merged data and its name is
-        surfaced for recovery (never silently destroyed); the next
-        run's ``recover_orphaned_staging`` janitor then restores or
-        surfaces it."""
+        Recovery semantics: a failure while writing staging leaves the
+        target untouched.  Once staging is written it holds the
+        complete merged result, so a failure in the drop or the rename
+        raises naming staging and the recovery SQL (staging is never
+        silently destroyed); the next run's ``recover_orphaned_staging``
+        janitor then restores or surfaces it."""
         staging = self._staging_name(target)
         self._overwrite_table(staging, df, partition_by, cluster_by)
         try:
-            self._overwrite_table(
-                target, self.spark.table(staging), partition_by, cluster_by
-            )
+            self._publish(staging, target)
         except Exception as exc:
             raise MaterializationError(
-                f"rewrite of {target} failed mid-swap; staging table "
+                f"publishing {target} failed mid-swap; staging table "
                 f"{staging} retains the complete merged result — recover "
-                f"with: INSERT OVERWRITE {target} SELECT * FROM {staging}"
+                f"with: {self._recovery_sql(staging, target)}"
             ) from exc
-        self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        # invalidate cached file listings for the replaced data files
-        self.spark.catalog.refreshTable(target)
 
     @staticmethod
     def _merge_buckets(config, meta) -> int | None:
@@ -765,7 +773,6 @@ class Materializer:
             strategy.recover_orphaned_staging(
                 target_table,
                 policy=(config or {}).get("on_orphaned_staging", "error"),
-                partition_by=strategy._partition_by(config),
             )
         result = strategy.materialize(
             model_name, target_table, select_sql, config or {}, meta or {}, full_refresh

@@ -29,14 +29,19 @@ class RunMetrics:
 
     def summary(self) -> dict:
         ok = [r for r in self.results if r.get("success")]
-        failed = [r for r in self.results if not r.get("success")]
+        skipped = [r for r in self.results if r.get("skipped")]
+        failed = [
+            r for r in self.results if not r.get("success") and not r.get("skipped")
+        ]
         return {
             "started_at": self.started_at,
             "finished_at": self.finished_at,
-            "models_run": len(self.results),
+            "models_run": len(self.results) - len(skipped),
             "succeeded": len(ok),
             "failed": len(failed),
             "failed_models": [r.get("model") for r in failed],
+            "skipped": len(skipped),
+            "skipped_models": [r.get("model") for r in skipped],
             "total_duration_sec": round(
                 sum(r.get("duration_sec", 0) or 0 for r in self.results), 4
             ),

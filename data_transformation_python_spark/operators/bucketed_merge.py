@@ -1,9 +1,10 @@
 """Partition-pruned (bucketed) MERGE fast path.
 
-The plain merge strategies rewrite the whole target twice per merge
-(staging + swap — materialization._swap_in), because vanilla Spark
-cannot mutate parquet in place.  At 100 TB that is the dominant cost:
-a 1%-churn merge still rewrites 100%.
+The plain merge strategies rewrite the whole target on every merge
+(one write into staging plus a rename into place —
+materialization._swap_in), because vanilla Spark cannot mutate
+parquet in place.  At 100 TB that is the dominant cost: a 1%-churn
+merge still rewrites 100%.
 
 This module stores the target partitioned by a stable hash bucket of
 the merge key (``__merge_bucket = pmod(xxhash64(keys), n)``) and
@@ -19,8 +20,9 @@ rewrites ONLY the partitions containing changed keys:
    byte-identical (verified by test_bucketed_merge).
 
 A merge touching b of n buckets costs O(b/n) of the table instead of
-O(2n/n).  The same layout is what Delta/Iceberg ``MERGE INTO`` with
-file skipping converges to; this is the vanilla-parquet equivalent.
+the whole table.  The same layout is what Delta/Iceberg ``MERGE INTO``
+with file skipping converges to; this is the vanilla-parquet
+equivalent.
 (reference: the ``CLUSTER BY (unique_key)`` intent on CDC tables,
 src/framework/cdc_polars.py:157-160 — SURVEY §2.7/§4.)
 """

@@ -106,6 +106,50 @@ def test_parallel_executor_graceful_degradation():
     assert by_model["good"]["success"]
 
 
+@pytest.mark.parametrize("failure", ["raises", "returns"])
+def test_parallel_executor_skips_dependents_of_failed_model(failure):
+    """a -> b -> c with an independent d: when a fails (by raising, or
+    by returning a failed result as ``execute_model`` does), b and c
+    are never run and report skipped; d still runs."""
+    from data_transformation_python_spark.metrics import RunMetrics
+
+    g = DependencyGraph()
+    g.add_model("a")
+    g.add_model("b", {"a"})
+    g.add_model("c", {"b"})
+    g.add_model("d")
+    ran = []
+
+    def run(name):
+        ran.append(name)
+        if name == "a":
+            if failure == "raises":
+                raise RuntimeError("boom")
+            return {"model": name, "success": False, "error": "boom"}
+        return {"model": name, "success": True}
+
+    results = ParallelExecutor(max_parallelism=2).execute_levels(
+        g.topological_sort(), run, graph=g
+    )
+    assert sorted(ran) == ["a", "d"]
+    by_model = {r["model"]: r for r in results}
+    for name in ("b", "c"):
+        assert by_model[name] == {
+            "model": name,
+            "success": False,
+            "skipped": True,
+            "error": "upstream a failed",
+        }
+    assert by_model["d"]["success"]
+    m = RunMetrics().start()
+    for r in results:
+        m.record(r)
+    s = m.finish()
+    assert (s["models_run"], s["failed"], s["skipped"]) == (2, 1, 2)
+    assert s["failed_models"] == ["a"]
+    assert sorted(s["skipped_models"]) == ["b", "c"]
+
+
 def test_to_dot():
     dot = _diamond().to_dot()
     assert '"raw" -> "left";' in dot

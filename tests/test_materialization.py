@@ -198,6 +198,137 @@ def test_orphaned_staging_default_policy_refuses(stack):
     assert spark.table(f"{db}.inc_halt").count() == 1
 
 
+@pytest.fixture()
+def save_calls(monkeypatch):
+    """Table names passed to ``DataFrameWriter.saveAsTable``, in order."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    calls = []
+    orig = DataFrameWriter.saveAsTable
+
+    def counted(self, name, *a, **kw):
+        calls.append(name)
+        return orig(self, name, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", counted)
+    return calls
+
+
+def _partitions(spark, table):
+    return sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect())
+
+
+def test_upsert_on_partitioned_target_publishes_with_one_write(stack, save_calls):
+    """A rewrite-backend upsert writes the merged table once (into
+    staging) and renames it into place: rows and partitions survive,
+    and no staging table is left behind."""
+    spark, db = stack["spark"], stack["db"]
+    _write_source(stack, [(1, "a", 10.0), (2, "b", 20.0)], "id bigint, p string, v double")
+    _write_model(
+        stack,
+        "inc_part",
+        "-- config: materialized=incremental, incremental_strategy=unique_key, "
+        "unique_key=id, partition_by=p\n"
+        "SELECT id, p, v FROM {{ source('raw','feed') }}",
+    )
+    assert stack["mx"].execute_model("inc_part")["success"]
+    _write_source(stack, [(2, "b", 99.0), (3, "c", 30.0)], "id bigint, p string, v double")
+    save_calls.clear()
+    r = stack["mx"].execute_model("inc_part")
+    assert r["success"], r
+    assert save_calls == [f"{db}.__stg_inc_part"]
+    t = f"{db}.inc_part"
+    rows = {(x.id, x.p, x.v) for x in spark.table(t).collect()}
+    assert rows == {(1, "a", 10.0), (2, "b", 99.0), (3, "c", 30.0)}
+    assert _partitions(spark, t) == ["p=a", "p=b", "p=c"]
+    assert spark.table(t).filter("p = 'c'").count() == 1
+    assert not spark.catalog.tableExists(f"{db}.__stg_inc_part")
+
+
+def test_cdc_retirement_publishes_with_one_write(stack, save_calls):
+    spark, db = stack["spark"], stack["db"]
+    schema = "id bigint, region string, __CDC_OPERATION string, __CDC_TIMESTAMP string"
+    _write_source(
+        stack,
+        [(1, "eu", "I", "2024-01-01 00:00:00"), (2, "us", "I", "2024-01-01 00:00:00")],
+        schema,
+    )
+    _write_model(
+        stack,
+        "scd_part",
+        "-- config: materialized=cdc_retirement, unique_key=id, partition_by=region\n"
+        "SELECT id, region, __CDC_OPERATION, "
+        "CAST(__CDC_TIMESTAMP AS TIMESTAMP_NTZ) AS __CDC_TIMESTAMP\n"
+        "FROM {{ source('raw','feed') }}",
+    )
+    assert stack["mx"].execute_model("scd_part")["success"]
+    _write_source(
+        stack,
+        [(2, "us", "D", "2024-02-01 00:00:00"), (3, "apac", "I", "2024-02-01 00:00:00")],
+        schema,
+    )
+    save_calls.clear()
+    r = stack["mx"].execute_model("scd_part")
+    assert r["success"], r
+    assert save_calls == [f"{db}.__stg_scd_part"]
+    out = spark.table(f"{db}.scd_part")
+    assert {x.id for x in out.filter("obsolete_date IS NULL").collect()} == {1, 3}
+    assert {x.id for x in out.filter("obsolete_date IS NOT NULL").collect()} == {2}
+    assert _partitions(spark, f"{db}.scd_part") == [
+        "region=apac",
+        "region=eu",
+        "region=us",
+    ]
+
+
+def test_publish_failure_keeps_staging_then_recovers_by_rename(
+    stack, save_calls, monkeypatch
+):
+    """A failure between dropping the target and renaming staging into
+    place names the staging table and the recovery SQL; the next run
+    with on_orphaned_staging=recover renames staging into place (no
+    copy) and applies its own batch on top."""
+    from pyspark.sql import SparkSession
+
+    spark, db = stack["spark"], stack["db"]
+    _write_source(stack, [(1, 10.0), (2, 20.0)], "id bigint, v double")
+    _write_model(
+        stack,
+        "inc_crash",
+        "-- config: materialized=incremental, incremental_strategy=unique_key, "
+        "unique_key=id, on_orphaned_staging=recover\n"
+        "SELECT id, v FROM {{ source('raw','feed') }}",
+    )
+    assert stack["mx"].execute_model("inc_crash")["success"]
+
+    orig_sql = SparkSession.sql
+
+    def failing_rename(self, query, *a, **kw):
+        if query.startswith("ALTER TABLE") and "RENAME TO" in query:
+            raise RuntimeError("injected crash before rename")
+        return orig_sql(self, query, *a, **kw)
+
+    monkeypatch.setattr(SparkSession, "sql", failing_rename)
+    _write_source(stack, [(2, 99.0), (3, 30.0)], "id bigint, v double")
+    r = stack["mx"].execute_model("inc_crash")
+    monkeypatch.setattr(SparkSession, "sql", orig_sql)
+    assert not r["success"]
+    stg = f"{db}.__stg_inc_crash"
+    assert stg in r["error"]
+    assert f"ALTER TABLE {stg} RENAME TO {db}.inc_crash" in r["error"]
+    assert not spark.catalog.tableExists(f"{db}.inc_crash")
+    assert spark.table(stg).count() == 3
+
+    _write_source(stack, [(4, 40.0)], "id bigint, v double")
+    save_calls.clear()
+    r = stack["mx"].execute_model("inc_crash")
+    assert r["success"], r
+    assert save_calls == [stg]  # the new merge only: recovery wrote nothing
+    rows = {x.id: x.v for x in spark.table(f"{db}.inc_crash").collect()}
+    assert rows == {1: 10.0, 2: 99.0, 3: 30.0, 4: 40.0}
+    assert not spark.catalog.tableExists(stg)
+
+
 def test_append_incremental(stack):
     spark, db = stack["spark"], stack["db"]
     _write_source(stack, [(1,)], "id bigint")
@@ -522,6 +653,89 @@ def test_source_reregisters_on_file_schema_drift(stack):
     )
     rel2 = mx2._source_relation("raw", "feed")
     assert set(spark.table(rel2).columns) == {"id", "v", "extra"}
+
+
+def test_source_registered_once_across_threads(stack, tmp_path, monkeypatch):
+    """The models of a level resolve sources from parallel threads:
+    a source re-pointed since its last registration is re-registered
+    by exactly one of them, and every thread gets the new relation."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import SparkSession
+
+    spark = stack["spark"]
+    _write_source(stack, [(1, "a")], "id bigint, v string")
+    stack["mx"]._source_relation("raw", "feed")
+    moved = tmp_path / "src_events_moved"
+    spark.createDataFrame([(2, "b")], "id bigint, v string").coalesce(1).write.parquet(
+        str(moved)
+    )
+    config = ProjectConfig(project_dir=tmp_path, database=stack["db"])
+    config.sources = SourceRegistry(
+        {"sources": {"raw": {"tables": {"feed": {"path": str(moved), "format": "parquet"}}}}}
+    )
+    mx = ModelExecutor(stack["mx"].executor, stack["parser"], config)
+
+    creates = []
+    orig_sql = SparkSession.sql
+
+    def counting(self, query, *a, **kw):
+        if query.startswith("CREATE TABLE"):
+            creates.append(query)
+        return orig_sql(self, query, *a, **kw)
+
+    monkeypatch.setattr(SparkSession, "sql", counting)
+    n = 8
+    barrier = threading.Barrier(n, timeout=60)
+
+    def resolve(_):
+        barrier.wait()
+        return mx._source_relation("raw", "feed")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=n) as pool:
+            rels = list(pool.map(resolve, range(n), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+        monkeypatch.setattr(SparkSession, "sql", orig_sql)
+    assert len(set(rels)) == 1
+    assert len(creates) == 1
+    assert [r.id for r in spark.table(rels[0]).collect()] == [2]
+
+
+def test_spark_written_int96_source_runs_through_model(stack):
+    """Spark's default parquet timestamp encoding is INT96, which arrow
+    reports as ``timestamp[ns]``; it must not be mistaken for the
+    TIMESTAMP(NANOS) vintage, whose normalizing view fails on a column
+    Spark already reads as TIMESTAMP."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    spark, db = stack["spark"], stack["db"]
+    ts = [datetime.datetime(2024, 1, 15, 12, 0), datetime.datetime(2024, 1, 16, 1, 30)]
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "INT96")
+    try:
+        _write_source(stack, [(1, ts[0]), (2, ts[1])], "id bigint, ts timestamp")
+    finally:
+        spark.conf.set(conf, prev)
+    (f,) = stack["src"].glob("*.parquet")
+    assert pq.ParquetFile(f).schema.column(1).physical_type == "INT96"
+    _write_model(
+        stack,
+        "int96_model",
+        "-- config: materialized=table\nSELECT id, ts FROM {{ source('raw','feed') }}",
+    )
+    r = stack["mx"].execute_model("int96_model")
+    assert r["success"], r
+    rows = {x.id: x.ts for x in spark.table(f"{db}.int96_model").collect()}
+    assert rows == {1: ts[0], 2: ts[1]}
 
 
 def test_cluster_by_produces_disjoint_file_ranges(stack):
