@@ -744,9 +744,9 @@ def bench_framework_run_all(
             SparkExecutor(spark, database=db), parser, config, state
         )
         t0 = time.perf_counter()
-        levels = build_dependency_graph(parser.parse_directory()).topological_sort()
+        graph = build_dependency_graph(parser.parse_directory())
         results = ParallelExecutor(max_parallelism=4).execute_levels(
-            levels, lambda name: mx.execute_model(name)
+            graph.topological_sort(), lambda name: mx.execute_model(name), graph
         )
         elapsed = time.perf_counter() - t0
         failed = [r for r in results if not r.get("success")]

@@ -130,7 +130,7 @@ def run_all(ctx: Context, vars_str, select, parallelism, full_refresh):
         lambda name: mx.execute_model(
             name, variables=variables, full_refresh=full_refresh
         ),
-        graph=graph,
+        graph,
     )
     for r in results:
         metrics.record(r)

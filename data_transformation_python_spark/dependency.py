@@ -245,12 +245,12 @@ class ParallelExecutor:
         self,
         levels: list[list[str]],
         run_fn,
-        graph: DependencyGraph | None = None,
+        graph: DependencyGraph,
     ) -> list[dict]:
         """Run ``levels`` in order, each level's models concurrently.
 
-        With a ``graph``, a model whose upstream failed is not run: it
-        and every transitive dependent get ``{"success": False,
+        A model whose upstream in ``graph`` failed is not run: it and
+        every transitive dependent get ``{"success": False,
         "skipped": True, "error": "upstream <m> failed"}`` (``m`` the
         model that failed), so nothing builds on a table its upstream
         did not refresh."""
@@ -260,8 +260,7 @@ class ParallelExecutor:
         for level in levels:
             runnable = []
             for name in level:
-                upstream = graph.nodes[name].dependencies if graph else set()
-                bad = sorted(upstream & cause.keys())
+                bad = sorted(graph.nodes[name].dependencies & cause.keys())
                 if bad:
                     cause[name] = cause[bad[0]]
                     results.append(

@@ -13,7 +13,10 @@ Scale notes:
   written once into ``__stg_<table>``, the target is dropped and
   staging is renamed into its place (a metastore update plus a
   directory rename; on an object store without atomic rename the
-  rename is a copy, which costs no more than a second write).  On a
+  rename is a copy, which costs no more than a second write).
+  Recovering a crashed swap from staging assumes an atomic directory
+  rename (local, HDFS): on an object store a crash partway through
+  the rename copy leaves staging incomplete.  On a
   MERGE-capable catalog (Delta/Iceberg) the same strategies remap to
   a single ``MERGE INTO``; the strategy interface keeps that door
   open without changing callers.
@@ -178,10 +181,25 @@ class Materialization:
           if it survived, rename staging into its place).
         - ``drop``: discard staging (caller asserts target is good).
 
+        A bucketed merge target (operators/bucketed_merge.py) is the
+        exception: its staging holds only the merged slice of the
+        affected buckets, so renaming it into place would lose every
+        other bucket.  There ``recover`` refuses like ``error`` and
+        only ``drop`` proceeds.
+
         Returns the action taken, or None when no orphan exists."""
         staging = self._staging_name(target)
         if not self.executor.table_exists(staging):
             return None
+        if policy != "drop" and self._is_bucketed_target(target):
+            raise MaterializationError(
+                f"orphaned staging table {staging} found for bucketed merge "
+                f"target {target}: a previous bucketed merge crashed and "
+                f"staging holds only the merged slice of its affected "
+                f"buckets, so it cannot be renamed into place. Check "
+                f"{target}, re-apply that merge batch if needed, then set "
+                f"config on_orphaned_staging: drop."
+            )
         if policy == "recover":
             self._publish(staging, target)
             return "recovered"
@@ -194,6 +212,13 @@ class Materialization:
             f"complete result. Recover with: {self._recovery_sql(staging, target)}"
             f", or set config on_orphaned_staging: recover|drop to resolve "
             f"automatically."
+        )
+
+    def _is_bucketed_target(self, target: str) -> bool:
+        from .operators.bucketed_merge import stored_bucket_count
+
+        return self.executor.table_exists(target) and (
+            stored_bucket_count(self.spark, target) is not None
         )
 
     @staticmethod
@@ -219,10 +244,11 @@ class Materialization:
 
         Recovery semantics: a failure while writing staging leaves the
         target untouched.  Once staging is written it holds the
-        complete merged result, so a failure in the drop or the rename
-        raises naming staging and the recovery SQL (staging is never
-        silently destroyed); the next run's ``recover_orphaned_staging``
-        janitor then restores or surfaces it."""
+        complete merged result (given an atomic rename; see the module
+        notes), so a failure in the drop or the rename raises naming
+        staging and the recovery SQL (staging is never silently
+        destroyed); the next run's ``recover_orphaned_staging`` janitor
+        then restores or surfaces it."""
         staging = self._staging_name(target)
         self._overwrite_table(staging, df, partition_by, cluster_by)
         try:

@@ -827,11 +827,9 @@ def _run_funnel(
         mx = ModelExecutor(
             SparkExecutor(spark, database=db), parser, config, state
         )
-        levels = build_dependency_graph(
-            parser.parse_directory()
-        ).topological_sort()
+        graph = build_dependency_graph(parser.parse_directory())
         results = ParallelExecutor(max_parallelism=4).execute_levels(
-            levels, lambda name: mx.execute_model(name)
+            graph.topological_sort(), lambda name: mx.execute_model(name), graph
         )
         failed = [r for r in results if not r.get("success")]
         if failed:
@@ -923,11 +921,9 @@ def pipeline_funnel_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             mx = ModelExecutor(
                 SparkExecutor(spark, database=db), parser, config, state
             )
-            levels = build_dependency_graph(
-                parser.parse_directory()
-            ).topological_sort()
+            graph = build_dependency_graph(parser.parse_directory())
             results = ParallelExecutor(max_parallelism=4).execute_levels(
-                levels, lambda name: mx.execute_model(name)
+                graph.topological_sort(), lambda name: mx.execute_model(name), graph
             )
             failed = [r for r in results if not r.get("success")]
             if failed:

@@ -252,12 +252,11 @@ def sweep_funnel_incremental(sizes_m: list[int] | None = None) -> list[dict]:
                 mx = ModelExecutor(
                     SparkExecutor(spark, database=db), parser, config, state
                 )
-                levels = build_dependency_graph(
-                    parser.parse_directory()
-                ).topological_sort()
+                graph = build_dependency_graph(parser.parse_directory())
+                levels = graph.topological_sort()
                 t0 = time.time()
                 rs = ParallelExecutor(max_parallelism=4).execute_levels(
-                    levels, lambda name: mx.execute_model(name)
+                    levels, lambda name: mx.execute_model(name), graph
                 )
                 t2 = time.time() - t0  # keeps the LAST (batch-2) time
                 bad = [r for r in rs if not r.get("success")]

@@ -48,13 +48,12 @@ def one_run(spark, sf_dir, extra_vars):
         mx = ModelExecutor(
             SparkExecutor(spark, database=db), parser, config, state
         )
-        levels = build_dependency_graph(
-            parser.parse_directory()
-        ).topological_sort()
+        graph = build_dependency_graph(parser.parse_directory())
+        levels = graph.topological_sort()
         t["config+parse+dag"] = time.perf_counter() - t0
         t0 = time.perf_counter()
         results = ParallelExecutor(max_parallelism=4).execute_levels(
-            levels, lambda name: mx.execute_model(name)
+            levels, lambda name: mx.execute_model(name), graph
         )
         t["execute_levels"] = time.perf_counter() - t0
         failed = [r for r in results if not r.get("success")]

@@ -86,8 +86,11 @@ def test_parallel_executor_runs_levels_in_order():
         ran.append(name)
         return {"model": name, "success": True}
 
+    g = DependencyGraph()
+    for name in ("a", "b", "c"):
+        g.add_model(name)
     results = ParallelExecutor(max_parallelism=2).execute_levels(
-        [["a"], ["b", "c"]], run
+        [["a"], ["b", "c"]], run, g
     )
     assert len(results) == 3
     assert ran[0] == "a"  # level barrier ordering
@@ -100,7 +103,10 @@ def test_parallel_executor_graceful_degradation():
             raise RuntimeError("boom")
         return {"model": name, "success": True}
 
-    results = ParallelExecutor().execute_levels([["bad", "good"]], run)
+    g = DependencyGraph()
+    for name in ("bad", "good"):
+        g.add_model(name)
+    results = ParallelExecutor().execute_levels([["bad", "good"]], run, g)
     by_model = {r["model"]: r for r in results}
     assert not by_model["bad"]["success"]
     assert by_model["good"]["success"]
@@ -129,7 +135,7 @@ def test_parallel_executor_skips_dependents_of_failed_model(failure):
         return {"model": name, "success": True}
 
     results = ParallelExecutor(max_parallelism=2).execute_levels(
-        g.topological_sort(), run, graph=g
+        g.topological_sort(), run, g
     )
     assert sorted(ran) == ["a", "d"]
     by_model = {r["model"]: r for r in results}

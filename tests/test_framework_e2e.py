@@ -51,7 +51,7 @@ def _run_all(project) -> list[dict]:
     graph = build_dependency_graph(parsed)
     levels = graph.topological_sort()
     return ParallelExecutor(max_parallelism=4).execute_levels(
-        levels, lambda name: project["mx"].execute_model(name)
+        levels, lambda name: project["mx"].execute_model(name), graph
     )
 
 

@@ -557,6 +557,55 @@ def test_bucketed_cdc_merge_handles_emptied_bucket(stack):
     assert spark.table(tbl).count() == 0
 
 
+def test_crashed_bucketed_merge_is_never_renamed_into_place(stack, monkeypatch):
+    """A bucketed merge's staging holds only the affected buckets, so
+    after a crash ``on_orphaned_staging: recover`` must refuse rather
+    than replace the whole target with that slice; ``drop`` clears it
+    and the merge proceeds against the intact target."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from data_transformation_python_spark.operators.bucketed_merge import (
+        stored_bucket_count,
+    )
+
+    spark, db = stack["spark"], stack["db"]
+    model = (
+        "-- config: materialized=incremental, incremental_strategy=unique_key,"
+        " unique_key=id, merge_buckets=4, on_orphaned_staging={policy}\n"
+        "SELECT id, v FROM {{{{ source('raw','feed') }}}}"
+    )
+    _write_source(stack, [(i, float(i)) for i in range(1, 9)], "id bigint, v double")
+    _write_model(stack, "inc_bk_crash", model.format(policy="recover"))
+    assert stack["mx"].execute_model("inc_bk_crash")["success"]
+    tbl, stg = f"{db}.inc_bk_crash", f"{db}.__stg_inc_bk_crash"
+
+    def crash(self, *a, **kw):
+        raise RuntimeError("injected crash before overwrite")
+
+    monkeypatch.setattr(DataFrameWriter, "insertInto", crash)
+    _write_source(stack, [(3, 33.0)], "id bigint, v double")
+    r = stack["mx"].execute_model("inc_bk_crash")
+    monkeypatch.undo()
+    assert not r["success"]
+    assert spark.catalog.tableExists(stg)
+    assert spark.table(stg).count() < 8  # a slice, not the whole table
+
+    r = stack["mx"].execute_model("inc_bk_crash")
+    assert not r["success"]
+    assert stg in r["error"] and "bucketed" in r["error"]
+    assert "RENAME" not in r["error"]
+    assert spark.table(tbl).count() == 8
+    assert stored_bucket_count(spark, tbl) == 4
+
+    _write_model(stack, "inc_bk_crash", model.format(policy="drop"))
+    r = stack["mx"].execute_model("inc_bk_crash")
+    assert r["success"], r
+    want = {i: float(i) for i in range(1, 9)}
+    want[3] = 33.0
+    assert {x.id: x.v for x in spark.table(tbl).collect()} == want
+    assert not spark.catalog.tableExists(stg)
+
+
 def test_on_schema_change_ignore_default(stack):
     """Drifted MODEL SELECT (the dbt scenario: the model SQL changed
     between runs): default policy keeps the target schema — new

@@ -69,9 +69,9 @@ def project(tmp_path_factory, spark):
 
 def _run_all(project) -> list[dict]:
     parsed = project["parser"].parse_directory()
-    levels = build_dependency_graph(parsed).topological_sort()
+    graph = build_dependency_graph(parsed)
     return ParallelExecutor(max_parallelism=4).execute_levels(
-        levels, lambda name: project["mx"].execute_model(name)
+        graph.topological_sort(), lambda name: project["mx"].execute_model(name), graph
     )
 
 
@@ -194,11 +194,9 @@ def test_funnel_bpe_mode_end_to_end(tmp_path, spark):
     ex = SparkExecutor(spark, database=db)
     mx = ModelExecutor(ex, parser, config, state)
     try:
-        levels = build_dependency_graph(
-            parser.parse_directory()
-        ).topological_sort()
+        graph = build_dependency_graph(parser.parse_directory())
         results = ParallelExecutor(max_parallelism=4).execute_levels(
-            levels, lambda name: mx.execute_model(name)
+            graph.topological_sort(), lambda name: mx.execute_model(name), graph
         )
         failed = [r for r in results if not r.get("success")]
         assert not failed, failed
