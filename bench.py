@@ -392,7 +392,7 @@ def corpus_scale_entries(spark, corpus_dir: str):
             # compressed-image codec throughput: 50k real PNGs
             # encoded + decoded through Arrow batches
             "multimodal_png_roundtrip",
-            lambda: mm.png_metadata(mm.synth_png_table(docs)),
+            lambda: mm.decode_table(mm.synth_table(docs, "png"), "png"),
         ),
         (
             # SemDeDup at scale dials: 100 clusters over 50k vectors,
@@ -555,7 +555,7 @@ def corpus_scale_entries(spark, corpus_dir: str):
             "multimodal_dhash_neardup",
             lambda: dd.hamming_neardup_stats(
                 mm.bmp_dhash_fine(
-                    mm.synth_neardup_bmp_table_scaled(docs, cluster_size=10)
+                    mm.synth_table(docs, "neardup_bmp_scaled")
                 ),
                 max_hamming=16,
             ),

@@ -724,7 +724,7 @@ def multimodal_jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.jpeg_metadata(mm.synth_jpeg_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "jpeg"), "jpeg")
 
 
 @query("multimodal_gif_meta", oracle=_GIF_ORACLE)
@@ -738,7 +738,7 @@ def multimodal_gif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.gif_metadata(mm.synth_gif_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "gif"), "gif")
 
 
 @query("multimodal_png_meta", oracle=_PNG_ORACLE)
@@ -752,7 +752,7 @@ def multimodal_png_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.png_metadata(mm.synth_png_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "png"), "png")
 
 
 @query("multimodal_ppm_meta", oracle=_PPM_ORACLE)
@@ -766,14 +766,14 @@ def multimodal_ppm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.ppm_metadata(mm.synth_ppm_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "ppm"), "ppm")
 
 
 @query("multimodal_bmp_meta", oracle=_BMP_ORACLE)
 def multimodal_bmp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image metadata extraction with a REAL codec: each row gets a
     genuine uncompressed 24-bit BMP payload (file header + DIB header
-    + padded bottom-up BGR rows), and ``bmp_metadata`` parses the
+    + padded bottom-up BGR rows), and the ``bmp`` decode parses the
     headers and decodes the pixel array back — the image twin of the
     WAV path.  The oracle replays the deterministic channel formula in
     SQL; the top-left-pixel columns pin row order, so a decoder that
@@ -782,7 +782,7 @@ def multimodal_bmp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.bmp_metadata(mm.synth_bmp_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "bmp"), "bmp")
 
 
 # --------------------------------------------------------------------------
@@ -835,7 +835,7 @@ FROM dims d JOIN sums s USING (doc_id)
 def multimodal_avi_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video metadata extraction with a REAL container codec: each row
     gets a genuine uncompressed AVI (RIFF tree: avih main header, strl
-    stream headers, movi DIB frames) and ``avi_metadata`` walks the
+    stream headers, movi DIB frames) and the ``avi`` decode walks the
     chunks and decodes every frame back — completing the third
     modality.  The oracle replays the per-frame channel formula in
     SQL; frame-0's top-left pixel pins frame AND row order, so a
@@ -844,7 +844,7 @@ def multimodal_avi_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.avi_metadata(mm.synth_avi_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "avi"), "avi")
 
 
 # --------------------------------------------------------------------------
@@ -894,8 +894,8 @@ def multimodal_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    resized = mm.resize_bmp_images(mm.synth_bmp_table(docs), 5, 4)
-    return mm.bmp_metadata(resized.select("doc_id", "payload"))
+    resized = mm.resize_bmp_images(mm.synth_table(docs, "bmp"), 5, 4)
+    return mm.decode_table(resized.select("doc_id", "payload"), "bmp")
 
 
 # --------------------------------------------------------------------------
@@ -937,7 +937,7 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    frames = mm.sample_avi_frames(mm.synth_avi_table(docs), every_n=2)
+    frames = mm.sample_avi_frames(mm.synth_table(docs, "avi"), every_n=2)
     return mm.bmp_channel_sums(frames)
 
 
@@ -945,7 +945,7 @@ def multimodal_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_wav_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio metadata extraction with a REAL codec: each row gets a
     genuine mono 16-bit PCM WAV payload (stdlib ``wave`` writer), and
-    ``wav_metadata`` parses the RIFF header and decodes the frames
+    the ``wav`` decode parses the RIFF header and decodes the frames
     back — the full binary-column decode path (Arrow-batched
     mapInPandas, integer-exact amplitude stats).  The oracle replays
     the deterministic PCM formula in SQL, so a header mis-parse or
@@ -953,7 +953,7 @@ def multimodal_wav_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.wav_metadata(mm.synth_wav_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "wav"), "wav")
 
 
 # --------------------------------------------------------------------------
@@ -1217,7 +1217,7 @@ def multimodal_mjpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.mjpeg_metadata(mm.synth_mjpeg_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "mjpeg"), "mjpeg")
 
 
 # --------------------------------------------------------------------------
@@ -1253,7 +1253,7 @@ def multimodal_mpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.ipv_metadata(mm.synth_ipv_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "ipv"), "ipv")
 
 
 # Pinned integer-dB PSNR constants for every lossy codec, computed
@@ -1452,7 +1452,7 @@ def multimodal_h264dc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264dc_metadata(mm.synth_h264dc_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264dc"), "h264dc")
 
 
 _WEIGHTED_ORACLE = """
@@ -1527,7 +1527,7 @@ def multimodal_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.mp4_metadata(mm.synth_mp4_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "mp4"), "mp4")
 
 
 _ADPCM_ORACLE = """
@@ -1555,50 +1555,10 @@ def multimodal_adpcm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula EXACTLY — a broken block walk or header parse goes red;
     the coded samples' fidelity is hash-pinned in
     multimodal_codec_psnr (SNR integers)."""
-    import numpy as np
-    import pandas as pd
-
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    payloads = mm.synth_adpcm_table(docs)
-
-    def _batches(batches):
-        for pdf in batches:
-            out = {
-                "doc_id": [], "sample_rate": [], "n_frames": [],
-                "n_blocks": [], "duration_ms": [], "block_headers_exact": [],
-            }
-            for doc_id, payload in zip(
-                pdf["doc_id"].astype("int64"), pdf["payload"]
-            ):
-                rate, ba, n, dec = mm._parse_adpcm_wav(bytes(payload))
-                spb = (ba - 4) * 2 + 1
-                src = mm._adpcm_pcm(int(doc_id))
-                ok = all(
-                    int(dec[k]) == int(src[k]) for k in range(0, n, spb)
-                )
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(n)
-                out["n_blocks"].append((n + spb - 1) // spb)
-                out["duration_ms"].append(n * 1000 // rate)
-                out["block_headers_exact"].append(bool(ok))
-            yield pd.DataFrame(out)
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sample_rate", T.LongType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("n_blocks", T.LongType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("block_headers_exact", T.BooleanType()),
-        ]
-    )
-    return payloads.mapInPandas(_batches, schema=schema)
+    return mm.decode_table(mm.synth_table(docs, "adpcm"), "adpcm")
 
 
 _H264C_ORACLE = """
@@ -1664,7 +1624,7 @@ def multimodal_h264c_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264c_metadata(mm.synth_h264c_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264c"), "h264c")
 
 
 # --------------------------------------------------------------------------
@@ -1714,7 +1674,7 @@ def multimodal_wav_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.wav_frame_features(mm.synth_wav_table(docs))
+    return mm.wav_frame_features(mm.synth_table(docs, "wav"))
 
 
 # --------------------------------------------------------------------------
@@ -1765,7 +1725,7 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.mp4_scene_cuts(mm.synth_scene_mp4_table(docs))
+    return mm.mp4_scene_cuts(mm.synth_table(docs, "scene_mp4"))
 
 
 # --------------------------------------------------------------------------
@@ -1819,7 +1779,7 @@ def multimodal_bmp_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.bmp_equalize_stats(mm.synth_bmp_table(docs))
+    return mm.bmp_equalize_stats(mm.synth_table(docs, "bmp"))
 
 
 # --------------------------------------------------------------------------
@@ -1894,7 +1854,7 @@ def multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    hashes = mm.bmp_dhash(mm.synth_neardup_bmp_table(docs))
+    hashes = mm.bmp_dhash(mm.synth_table(docs, "neardup_bmp"))
     out = dd.hamming_neardup_stats(hashes, max_hamming=8)
     return out.select(
         "doc_id", "band0", "band1", "band2", "band3", "n_neardup",
@@ -1987,7 +1947,7 @@ def multimodal_image_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    hashes = mm.bmp_dhash(mm.synth_neardup_bmp_table(docs))
+    hashes = mm.bmp_dhash(mm.synth_table(docs, "neardup_bmp"))
     return dd.fingerprint_dedup_groups(hashes, max_hamming=8)
 
 
@@ -2059,7 +2019,7 @@ def multimodal_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    hashes = mm.wav_energy_fingerprint(mm.synth_neardup_wav_table(docs))
+    hashes = mm.wav_energy_fingerprint(mm.synth_table(docs, "neardup_wav"))
     out = dd.hamming_neardup_stats(hashes, max_hamming=8)
     return out.select(
         "doc_id", "band0", "band1", "band2", "band3", "n_neardup",
@@ -2137,7 +2097,7 @@ def multimodal_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    hashes = mm.avi_temporal_fingerprint(mm.synth_neardup_avi_table(docs))
+    hashes = mm.avi_temporal_fingerprint(mm.synth_table(docs, "neardup_avi"))
     out = dd.hamming_neardup_stats(hashes, max_hamming=8)
     return out.select(
         "doc_id", "band0", "band1", "band2", "band3", "n_neardup",
@@ -2244,7 +2204,7 @@ def multimodal_h264ac8_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264ac8_metadata(mm.synth_h264ac8_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264ac8"), "h264ac8")
 
 
 # --------------------------------------------------------------------------
@@ -2327,7 +2287,7 @@ def multimodal_h264p_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264p_metadata(mm.synth_h264p_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264p"), "h264p")
 
 
 _H264Q_ORACLE = """
@@ -2380,7 +2340,7 @@ def multimodal_h264q_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264q_metadata(mm.synth_h264q_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264q"), "h264q")
 
 
 _H264PART_ORACLE = """
@@ -2434,7 +2394,7 @@ def multimodal_h264part_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264part_metadata(mm.synth_h264part_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264part"), "h264part")
 
 
 _H264P8_ORACLE = """
@@ -2476,7 +2436,7 @@ def multimodal_h264p8_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264p8_metadata(mm.synth_h264p8_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264p8"), "h264p8")
 
 
 _H264SUB_ORACLE = """
@@ -2523,7 +2483,7 @@ def multimodal_h264sub_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264sub_metadata(mm.synth_h264sub_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264sub"), "h264sub")
 
 
 _H264PR_ORACLE = """
@@ -2586,7 +2546,7 @@ def multimodal_h264pr_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264pr_metadata(mm.synth_h264pr_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264pr"), "h264pr")
 
 
 @query("multimodal_h264cac8_meta", oracle=_H264CAC8_ORACLE)
@@ -2606,7 +2566,7 @@ def multimodal_h264cac8_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264cac8_metadata(mm.synth_h264cac8_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264cac8"), "h264cac8")
 
 
 # --------------------------------------------------------------------------
@@ -2722,7 +2682,7 @@ def multimodal_h264wb_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264wb_metadata(mm.synth_h264wb_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264wb"), "h264wb")
 
 
 # --------------------------------------------------------------------------
@@ -2777,7 +2737,7 @@ def multimodal_h264td_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264td_metadata(mm.synth_h264td_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264td"), "h264td")
 
 
 # --------------------------------------------------------------------------
@@ -2839,7 +2799,7 @@ def multimodal_h264bd_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264bd_metadata(mm.synth_h264bd_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264bd"), "h264bd")
 
 
 # --------------------------------------------------------------------------
@@ -2898,7 +2858,7 @@ def multimodal_h264wi_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264wi_metadata(mm.synth_h264wi_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264wi"), "h264wi")
 
 
 # --------------------------------------------------------------------------
@@ -2961,7 +2921,7 @@ def multimodal_h264ms_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264ms_metadata(mm.synth_h264ms_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264ms"), "h264ms")
 
 
 # --------------------------------------------------------------------------
@@ -3047,7 +3007,7 @@ def multimodal_h264b8_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264b8_metadata(mm.synth_h264b8_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264b8"), "h264b8")
 
 
 _H264B8D_ORACLE = """
@@ -3095,7 +3055,7 @@ def multimodal_h264b8d_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264b8d_metadata(mm.synth_h264b8d_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264b8d"), "h264b8d")
 
 
 _H264B8S_ORACLE = """
@@ -3145,7 +3105,7 @@ def multimodal_h264b8s_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264b8s_metadata(mm.synth_h264b8s_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264b8s"), "h264b8s")
 
 
 @query("multimodal_h264msb_meta", oracle=_H264MSB_ORACLE)
@@ -3176,7 +3136,7 @@ def multimodal_h264msb_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264msb_metadata(mm.synth_h264msb_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264msb"), "h264msb")
 
 
 # --------------------------------------------------------------------------
@@ -3248,7 +3208,7 @@ def multimodal_h264wp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264wp_metadata(mm.synth_h264wp_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264wp"), "h264wp")
 
 
 @query("multimodal_h264b_meta", oracle=_H264B_ORACLE)
@@ -3272,4 +3232,4 @@ def multimodal_h264b_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
 
     docs = load(spark, sf_dir, "documents")
-    return mm.h264b_metadata(mm.synth_h264b_table(docs))
+    return mm.decode_table(mm.synth_table(docs, "h264b"), "h264b")

@@ -793,12 +793,19 @@ _FUNNEL_ORACLE = _funnel_oracle()
 
 
 def _run_funnel(
-    spark: SparkSession, sf_dir: str, extra_vars: dict | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    extra_vars: dict | None = None,
+    batches: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Execute the REAL framework over the example_pipeline project
-    (one-shot) and return gold_packed.  ``extra_vars`` overrides
-    profile vars — the config-driven tokenizer-family switch rides
-    through here (reference: the dbt-style --vars override)."""
+    """Execute the REAL framework over a copy of the example_pipeline
+    project and return gold_packed.  ``extra_vars`` overrides profile
+    vars — the config-driven tokenizer-family switch rides through
+    here (reference: the dbt-style --vars override).  With
+    ``batches`` (documents filter predicates) the DAG runs once per
+    batch against a staged source holding only that batch's
+    documents, each run on top of the previous run's tables and
+    state; otherwise it runs once over ``sf_dir``."""
     import os
     import shutil
     import tempfile
@@ -815,25 +822,55 @@ def _run_funnel(
     tmp = tempfile.mkdtemp(prefix="dtps_funnel_")
     proj = Path(tmp) / "example_pipeline"
     shutil.copytree(src, proj)
+    source_dirs = [sf_dir]
+    if batches:
+        docs = load(spark, sf_dir, "documents")
+        source_dirs = []
+        for i, pred in enumerate(batches):
+            bdir = Path(tmp) / f"batch{i + 1}"
+            docs.filter(pred).write.parquet(str(bdir / "documents.parquet"))
+            source_dirs.append(str(bdir))
     db = f"funnel_{uuid.uuid4().hex[:8]}"
     old_env = os.environ.get("TESTDATA_DIR")
-    os.environ["TESTDATA_DIR"] = sf_dir  # sources.yml reads ${TESTDATA_DIR}
     try:
-        config = load_config(proj)
-        config.database = db
-        config.variables.update(extra_vars or {})
-        parser = SQLParser(config.models_dir)
-        state = create_state_manager(config.state_dir, config.env_name)
-        mx = ModelExecutor(
-            SparkExecutor(spark, database=db), parser, config, state
-        )
-        graph = build_dependency_graph(parser.parse_directory())
-        results = ParallelExecutor(max_parallelism=4).execute_levels(
-            graph.topological_sort(), lambda name: mx.execute_model(name), graph
-        )
-        failed = [r for r in results if not r.get("success")]
-        if failed:
-            raise RuntimeError(f"curation funnel failed: {failed[:1]}")
+        for source_dir in source_dirs:
+            # ${TESTDATA_DIR} is substituted when sources.yml is READ
+            # (config.load_yaml), so the env var must be set BEFORE
+            # load_config and the executor rebuilt per batch — exactly
+            # what a scheduler does per run.  The catalog tables and
+            # the on-disk state dir carry the incremental state
+            # across batches.
+            os.environ["TESTDATA_DIR"] = source_dir
+            config = load_config(proj)
+            config.database = db
+            config.variables.update(extra_vars or {})
+            parser = SQLParser(config.models_dir)
+            state = create_state_manager(config.state_dir, config.env_name)
+            mx = ModelExecutor(
+                SparkExecutor(spark, database=db), parser, config, state
+            )
+            graph = build_dependency_graph(parser.parse_directory())
+            results = ParallelExecutor(max_parallelism=4).execute_levels(
+                graph.topological_sort(), mx.execute_model, graph
+            )
+            failed = [r for r in results if not r.get("success")]
+            if failed:
+                raise RuntimeError(
+                    f"curation funnel failed ({source_dir}): {failed[:1]}"
+                )
+        if batches:
+            # self-check: after the last batch the MERGE-maintained
+            # bronze must hold the whole corpus (earlier rows retained
+            # + new keys inserted) — a staging/env regression fails
+            # loudly here instead of surfacing as a silent oracle
+            # mismatch
+            n_bronze = spark.table(f"{db}.bronze_documents").count()
+            n_docs = docs.count()
+            if n_bronze != n_docs:
+                raise RuntimeError(
+                    f"incremental funnel: bronze has {n_bronze} rows after"
+                    f" the last batch, expected the full corpus {n_docs}"
+                )
         # materialize into local rows BEFORE the database drops — the
         # returned frame must outlive the temp warehouse
         packed = spark.table(f"{db}.gold_packed")
@@ -879,74 +916,6 @@ def pipeline_funnel_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot full-corpus oracle — the two-batch-vs-one-shot shape
     q_incremental_aggregate uses, now through the whole composed
     product (models, refs, $vars, DQ tests, level-parallel DAG)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-    from pathlib import Path
-
-    from ..config import load_config
-    from ..dependency import ParallelExecutor, build_dependency_graph
-    from ..executor import ModelExecutor, SparkExecutor
-    from ..parser import SQLParser
-    from ..state import create_state_manager
-
-    src = Path(__file__).resolve().parents[2] / "example_pipeline"
-    tmp = tempfile.mkdtemp(prefix="dtps_funnel_inc_")
-    proj = Path(tmp) / "example_pipeline"
-    shutil.copytree(src, proj)
-    docs = load(spark, sf_dir, "documents")
-    batches = []
-    for i, pred in enumerate(("doc_id % 4 != 0", "doc_id % 4 = 0")):
-        bdir = Path(tmp) / f"batch{i + 1}"
-        docs.filter(pred).write.parquet(str(bdir / "documents.parquet"))
-        batches.append(str(bdir))
-    db = f"funnel_inc_{uuid.uuid4().hex[:8]}"
-    old_env = os.environ.get("TESTDATA_DIR")
-    try:
-        for bdir in batches:
-            # ${TESTDATA_DIR} is substituted when sources.yml is READ
-            # (config.load_yaml), so the env var must be set BEFORE
-            # load_config and the executor rebuilt per batch — exactly
-            # what a scheduler does per run.  The catalog tables and
-            # the on-disk state dir carry the incremental state
-            # across batches.  (The first version set the env inside
-            # a single-config loop; the sf0.01 parity sweep caught it
-            # reading the default path for BOTH batches.)
-            os.environ["TESTDATA_DIR"] = bdir
-            config = load_config(proj)
-            config.database = db
-            parser = SQLParser(config.models_dir)
-            state = create_state_manager(config.state_dir, config.env_name)
-            mx = ModelExecutor(
-                SparkExecutor(spark, database=db), parser, config, state
-            )
-            graph = build_dependency_graph(parser.parse_directory())
-            results = ParallelExecutor(max_parallelism=4).execute_levels(
-                graph.topological_sort(), lambda name: mx.execute_model(name), graph
-            )
-            failed = [r for r in results if not r.get("success")]
-            if failed:
-                raise RuntimeError(
-                    f"incremental funnel failed ({bdir}): {failed[:1]}"
-                )
-        # self-check: after batch 2 the MERGE-maintained bronze must
-        # hold the whole corpus (batch-1 rows retained + batch-2 keys
-        # inserted) — a staging/env regression fails loudly here
-        # instead of surfacing as a silent oracle mismatch
-        n_bronze = spark.table(f"{db}.bronze_documents").count()
-        n_docs = docs.count()
-        if n_bronze != n_docs:
-            raise RuntimeError(
-                f"incremental funnel: bronze has {n_bronze} rows after"
-                f" batch 2, expected the full corpus {n_docs}"
-            )
-        packed = spark.table(f"{db}.gold_packed")
-        return spark.createDataFrame(packed.collect(), packed.schema)
-    finally:
-        if old_env is None:
-            os.environ.pop("TESTDATA_DIR", None)
-        else:
-            os.environ["TESTDATA_DIR"] = old_env
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _run_funnel(
+        spark, sf_dir, batches=("doc_id % 4 != 0", "doc_id % 4 = 0")
+    )

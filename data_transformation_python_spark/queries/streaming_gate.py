@@ -1534,7 +1534,7 @@ def q_stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 7 != 0
     )
     corpus_h = materialize(
-        mm.bmp_dhash(mm.synth_neardup_bmp_table(corpus))
+        mm.bmp_dhash(mm.synth_table(corpus, "neardup_bmp"))
     )
     band_structs = F.array(
         *[
@@ -1552,7 +1552,7 @@ def q_stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "corpus_doc_id", "c_band0", "c_band1", "c_band2", "c_band3",
         "__b.band_idx", "__b.band_val",
     )
-    new_h = mm.bmp_dhash(mm.synth_neardup_bmp_table(stream)).select(
+    new_h = mm.bmp_dhash(mm.synth_table(stream, "neardup_bmp")).select(
         F.col("doc_id").alias("new_doc_id"),
         *[F.col(f"band{i}").alias(f"n_band{i}") for i in range(4)],
         F.explode(band_structs).alias("__b"),

@@ -51,6 +51,72 @@ def test_decode_media_is_stubbed():
         mm.decode_media(b"xx", "image")
 
 
+def test_decode_media_h264_decodes_inter_gops():
+    """``decode_media(kind="h264")`` reads P-GOP streams (it used to
+    split them into intra triplets and fail before the first slice)
+    and still returns the per-picture frames of all-IDR streams."""
+    import numpy as np
+
+    from data_transformation_python_spark.operators.h264_codec import (
+        h264_decode_frame,
+        h264_decode_gop,
+        split_annexb,
+    )
+
+    payload, _md5 = mm._write_h264p(3)
+    got = mm.decode_media(payload, "h264")
+    want, _stats = h264_decode_gop(split_annexb(payload))
+    assert len(got) == len(want) == mm._h264p_dims(3)[2]
+    assert all(np.array_equal(g, w) for g, w in zip(got, want))
+
+    intra = mm._write_h264dc(4)
+    nals = split_annexb(intra)
+    triplets = [
+        h264_decode_frame(nals[i : i + 3]) for i in range(0, len(nals), 3)
+    ]
+    got = mm.decode_media(intra, "h264")
+    assert len(got) == len(triplets)
+    assert all(np.array_equal(g, w) for g, w in zip(got, triplets))
+
+
+def test_decode_table_truncated_gop_names_the_doc(spark):
+    """A payload missing its last NAL fails with an explicit
+    ValueError naming the doc_id and the expected vs actual count —
+    not an ``assert`` that ``python -O`` would strip."""
+    from data_transformation_python_spark.operators.h264_codec import (
+        annexb,
+        split_annexb,
+    )
+
+    payload, md5 = mm._write_h264p(3)
+    nf = mm._h264p_dims(3)[2]
+    truncated = annexb(split_annexb(payload)[:-1])
+    msg = f"doc_id 3: NAL count: expected {2 + nf}, got {1 + nf}"
+    with pytest.raises(ValueError, match=msg):
+        mm.CODECS["h264p"].stat(3, truncated, md5)
+    df = spark.createDataFrame(
+        [(3, bytearray(truncated), md5)],
+        "doc_id long, payload binary, rec_md5 string",
+    )
+    with pytest.raises(Exception) as err:
+        mm.decode_table(df, "h264p").collect()
+    assert "ValueError" in str(err.value)
+    assert "doc_id 3: NAL count" in str(err.value)
+
+
+def test_codec_table_shape():
+    """Every codec synthesizes; the six raw formats and the near-dup
+    fixtures encode in place, every other encoder spreads first."""
+    in_place = {"wav", "bmp", "avi", "ppm", "png", "gif", "neardup_bmp",
+                "neardup_wav", "neardup_avi", "neardup_bmp_scaled"}
+    assert len(mm.CODECS) == 37
+    assert {c for c, s in mm.CODECS.items() if not s.spread} == in_place
+    for codec, spec in mm.CODECS.items():
+        assert (spec.stat is None) == (spec.meta_schema is None), codec
+    with pytest.raises(ValueError, match="no decode stats"):
+        mm.decode_table(None, "scene_mp4")
+
+
 def test_run_metrics_summary(tmp_path):
     m = RunMetrics().start()
     m.record({"model": "a", "success": True, "duration_sec": 1.5, "strategy": "table"})
@@ -68,7 +134,7 @@ def test_run_metrics_summary(tmp_path):
 
 
 def test_wav_metadata_is_a_real_parser(spark):
-    """wav_metadata must decode ANY 16-bit PCM WAV — including stereo
+    """The wav decode must read ANY 16-bit PCM WAV — including stereo
     files it never synthesized — proving it parses the RIFF header
     rather than replaying the generator formula."""
     import io
@@ -77,7 +143,7 @@ def test_wav_metadata_is_a_real_parser(spark):
     import numpy as np
 
     from data_transformation_python_spark.operators.multimodal import (
-        wav_metadata,
+        decode_table,
     )
 
     buf = io.BytesIO()
@@ -90,7 +156,7 @@ def test_wav_metadata_is_a_real_parser(spark):
     df = spark.createDataFrame(
         [(1, bytearray(buf.getvalue()))], "doc_id long, payload binary"
     )
-    row = wav_metadata(df).first()
+    row = decode_table(df, "wav").first()
     assert row["sample_rate"] == 44100
     assert row["n_channels"] == 2
     assert row["n_frames"] == 3
@@ -101,14 +167,13 @@ def test_wav_metadata_is_a_real_parser(spark):
 def test_synth_wav_roundtrip_matches_formula(spark):
     from data_transformation_python_spark.operators.multimodal import (
         _wav_pcm,
-        synth_wav_table,
-        wav_metadata,
+        decode_table,
+        synth_table,
     )
 
     df = spark.createDataFrame([(7,), (123,)], "doc_id long")
-    rows = {
-        r["doc_id"]: r for r in wav_metadata(synth_wav_table(df)).collect()
-    }
+    table = decode_table(synth_table(df, "wav"), "wav")
+    rows = {r["doc_id"]: r for r in table.collect()}
     for doc_id in (7, 123):
         pcm = _wav_pcm(doc_id)
         assert rows[doc_id]["n_frames"] == len(pcm)
@@ -124,7 +189,7 @@ def test_bmp_parser_handles_foreign_topdown_bmp(spark):
     import struct
 
     from data_transformation_python_spark.operators.multimodal import (
-        bmp_metadata,
+        decode_table,
     )
 
     w, h = 3, 2  # row stride 9 → 3 pad bytes
@@ -141,7 +206,7 @@ def test_bmp_parser_handles_foreign_topdown_bmp(spark):
     df = spark.createDataFrame(
         [(5, bytearray(hdr + dib + pixels))], "doc_id long, payload binary"
     )
-    row = bmp_metadata(df).first()
+    row = decode_table(df, "bmp").first()
     assert (row["width"], row["height"], row["n_pixels"]) == (3, 2, 6)
     # top-left pixel is the FIRST stored row in a top-down file
     assert (row["px00_r"], row["px00_g"], row["px00_b"]) == (100, 0, 0)
@@ -154,14 +219,13 @@ def test_synth_bmp_roundtrip_matches_formula(spark):
     from data_transformation_python_spark.operators.multimodal import (
         _bmp_channels,
         _bmp_dims,
-        bmp_metadata,
-        synth_bmp_table,
+        decode_table,
+        synth_table,
     )
 
     df = spark.createDataFrame([(7,), (123,)], "doc_id long")
-    rows = {
-        r["doc_id"]: r for r in bmp_metadata(synth_bmp_table(df)).collect()
-    }
+    table = decode_table(synth_table(df, "bmp"), "bmp")
+    rows = {r["doc_id"]: r for r in table.collect()}
     for doc_id in (7, 123):
         w, h = _bmp_dims(doc_id)
         r, g, b = _bmp_channels(doc_id, w, h)
@@ -183,7 +247,7 @@ def test_avi_walker_handles_junk_chunks_and_dc_fourcc(spark):
         _avi_frame_channels,
         _dib_frame_bytes,
         _riff_chunk,
-        avi_metadata,
+        decode_table,
     )
 
     w, h, nf, fps = 3, 2, 2, 25
@@ -205,7 +269,7 @@ def test_avi_walker_handles_junk_chunks_and_dc_fourcc(spark):
     df = spark.createDataFrame(
         [(9, bytearray(data))], "doc_id long, payload binary"
     )
-    row = avi_metadata(df).first()
+    row = decode_table(df, "avi").first()
     assert (row["width"], row["height"], row["n_frames"], row["fps"]) == (
         3, 2, 2, 25,
     )
@@ -217,14 +281,13 @@ def test_synth_avi_roundtrip_matches_formula(spark):
     from data_transformation_python_spark.operators.multimodal import (
         _avi_dims,
         _avi_frame_channels,
-        avi_metadata,
-        synth_avi_table,
+        decode_table,
+        synth_table,
     )
 
     df = spark.createDataFrame([(7,), (123,)], "doc_id long")
-    rows = {
-        r["doc_id"]: r for r in avi_metadata(synth_avi_table(df)).collect()
-    }
+    table = decode_table(synth_table(df, "avi"), "avi")
+    rows = {r["doc_id"]: r for r in table.collect()}
     for doc_id in (7, 123):
         w, h, nf, fps = _avi_dims(doc_id)
         got = rows[doc_id]
@@ -548,7 +611,7 @@ def test_bmp_dhash_matches_reference(spark):
     ids = spark.createDataFrame([(i,) for i in (0, 7, 123)], "doc_id bigint")
     got = {
         r.doc_id: (r.band0, r.band1, r.band2, r.band3)
-        for r in mm.bmp_dhash(mm.synth_neardup_bmp_table(ids)).collect()
+        for r in mm.bmp_dhash(mm.synth_table(ids, "neardup_bmp")).collect()
     }
     off = np.arange(16, dtype=np.int64)
     for doc_id in (0, 7, 123):
@@ -574,7 +637,7 @@ def test_hamming_neardup_finds_group_peers(spark):
     ids = spark.createDataFrame(
         [(i,) for i in (0, 50, 100, 150, 1, 51, 101, 151)], "doc_id bigint"
     )
-    hashes = mm.bmp_dhash(mm.synth_neardup_bmp_table(ids))
+    hashes = mm.bmp_dhash(mm.synth_table(ids, "neardup_bmp"))
     out = {
         r.doc_id: r
         for r in dd.hamming_neardup_stats(hashes, max_hamming=8).collect()
@@ -593,7 +656,7 @@ def test_hamming_neardup_isolated_rows_report_zero(spark):
     from data_transformation_python_spark.operators import dedup as dd
 
     ids = spark.createDataFrame([(2,), (3,), (4,)], "doc_id bigint")
-    hashes = mm.bmp_dhash(mm.synth_neardup_bmp_table(ids))
+    hashes = mm.bmp_dhash(mm.synth_table(ids, "neardup_bmp"))
     for r in dd.hamming_neardup_stats(hashes, max_hamming=8).collect():
         assert r.n_neardup == 0
         assert r.min_partner is None and r.min_hamming is None
@@ -608,7 +671,7 @@ def test_fingerprint_dedup_groups_composition(spark):
     ids = spark.createDataFrame(
         [(i,) for i in (0, 50, 100, 1, 51, 2)], "doc_id bigint"
     )
-    hashes = mm.bmp_dhash(mm.synth_neardup_bmp_table(ids))
+    hashes = mm.bmp_dhash(mm.synth_table(ids, "neardup_bmp"))
     out = {
         r.doc_id: r
         for r in dd.fingerprint_dedup_groups(hashes, max_hamming=8).collect()
@@ -633,7 +696,7 @@ def test_bmp_dhash_fine_matches_reference_and_separates(spark):
     ids = spark.createDataFrame(
         [(i,) for i in (10, 11, 12, 30)], "doc_id bigint"
     )
-    table = mm.synth_neardup_bmp_table_scaled(ids, cluster_size=10)
+    table = mm.synth_table(ids, "neardup_bmp_scaled")
     got = {
         r.doc_id: (r.band0, r.band1, r.band2, r.band3)
         for r in mm.bmp_dhash_fine(table).collect()
@@ -700,7 +763,7 @@ def test_wav_fingerprint_groups_cluster(spark):
     ids = spark.createDataFrame(
         [(i,) for i in (5, 55, 105, 6, 56)], "doc_id bigint"
     )
-    hashes = mm.wav_energy_fingerprint(mm.synth_neardup_wav_table(ids))
+    hashes = mm.wav_energy_fingerprint(mm.synth_table(ids, "neardup_wav"))
     out = {
         r.doc_id: r
         for r in dd.hamming_neardup_stats(hashes, max_hamming=8).collect()
@@ -724,7 +787,7 @@ def test_avi_temporal_fingerprint_reference_and_clusters(spark):
     ids = spark.createDataFrame(
         [(i,) for i in (11, 61, 111, 4)], "doc_id bigint"
     )
-    table = mm.synth_neardup_avi_table(ids)
+    table = mm.synth_table(ids, "neardup_avi")
     got = {
         r.doc_id: (r.band0, r.band1, r.band2, r.band3)
         for r in mm.avi_temporal_fingerprint(table).collect()
@@ -770,7 +833,7 @@ def test_binaryfile_ingest_matches_synth_path(spark, tmp_path):
     ids_df = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
     want = {
         r.doc_id: (r.band0, r.band1, r.band2, r.band3)
-        for r in mm.bmp_dhash(mm.synth_neardup_bmp_table(ids_df)).collect()
+        for r in mm.bmp_dhash(mm.synth_table(ids_df, "neardup_bmp")).collect()
     }
     assert set(got) == set(ids)
     for i in ids:
