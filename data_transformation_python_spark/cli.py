@@ -29,7 +29,7 @@ from .parser import SQLParser
 from .plans.plan import PlanGenerator
 from .session import get_spark
 from .state import create_state_manager
-from .testing import TestRunner
+from .testing import AnomalyTests, TestRunner
 
 
 def _parse_vars(vars_str: str | None) -> dict:
@@ -227,15 +227,23 @@ def validate(ctx: Context):
 @click.option("--model", default=None)
 @click.pass_obj
 def test(ctx: Context, model):
-    """Run schema.yml + custom SQL data-quality tests."""
+    """Run schema.yml + custom SQL data-quality tests, one aggregate per
+    table, several tables at a time."""
     registry = ModelRegistry(ctx.config.models_dir)
     mx = ctx.model_executor()
     runner = TestRunner(mx.executor, registry, ctx.config.tests_dir, state=ctx.state)
-    results = []
     names = [model] if model else sorted(registry.models)
-    for n in names:
-        results += runner.run_model_tests(n, mx.full_table_name(n))
-    results += runner.run_custom_sql_tests()
+    results = runner.run_all({n: mx.full_table_name(n) for n in names})
+    # Save the volume_anomaly history this run recorded, and nothing
+    # else: onto the state as it is on disk now, so what a concurrent
+    # run-all or serve saved meanwhile is kept.
+    key = AnomalyTests.VOLUME_KEY
+    history = {n: ctx.state.get_incremental_state(n, key) for n in names}
+    ctx.state.load()
+    for n, h in history.items():
+        if h is not None:
+            ctx.state.set_incremental_state(n, key, h)
+    ctx.state.save()
     for r in results:
         status = "PASS" if r.passed else f"FAIL({r.rows_failed})"
         click.echo(f"{r.model}\t{r.test_name}\t{r.column or '-'}\t{status}")

@@ -640,6 +640,11 @@ def q_incremental_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # $vars, and incremental materializations.  (Round 12 added the
 # scrub + decontam stages — X8/X9 were standalone-gated but absent
 # from the composed DAG; a real curation pipeline runs both.)
+#
+# Every CTE referenced more than once — here and in the tails spliced
+# after it — is MATERIALIZED: DuckDB otherwise re-inlines it at each
+# reference, and the DSIR tails that read sc / wts / decon several
+# times grew from under 1 s to minutes.
 # --------------------------------------------------------------------------
 _FUNNEL_PREFIX = """
 WITH raw AS (
@@ -649,11 +654,11 @@ WITH raw AS (
               || lpad(CAST(doc_id % 10000 AS STRING), 4, '0') AS text,
          lang, source, n_chars
   FROM documents),
-bronze AS (
+bronze AS MATERIALIZED (
   SELECT doc_id, text, lang, source, n_chars,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
   FROM raw),
-signals AS (
+signals AS MATERIALIZED (
   SELECT doc_id, text, lang, n_tokens,
          list_sum(list_transform(string_split(text, ' '), x -> length(x))) AS sum_token_len,
          len(list_filter(string_split(text, ' '), x -> regexp_matches(x, '[a-zA-Z]'))) AS n_alpha_words,
@@ -662,7 +667,7 @@ signals AS (
          len(list_filter(string_split(text, ' '), x -> list_contains(['der','die','das','und','ist','ein'], x))) AS n_stop_de,
          len(list_filter(string_split(text, ' '), x -> list_contains(['el','la','los','y','es','un'], x))) AS n_stop_es
   FROM bronze),
-quality AS (
+quality AS MATERIALIZED (
   SELECT doc_id, text, lang, n_tokens
   FROM signals
   WHERE n_tokens > 0
@@ -675,13 +680,13 @@ toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM quality),
 idx AS (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i
         FROM toks WHERE len(t) >= 3),
 sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle FROM idx),
-sig AS (SELECT doc_id,
+sig AS MATERIALIZED (SELECT doc_id,
   MIN(md5('0:' || shingle)) AS m0, MIN(md5('1:' || shingle)) AS m1,
   MIN(md5('2:' || shingle)) AS m2, MIN(md5('3:' || shingle)) AS m3,
   MIN(md5('4:' || shingle)) AS m4, MIN(md5('5:' || shingle)) AS m5,
   MIN(md5('6:' || shingle)) AS m6, MIN(md5('7:' || shingle)) AS m7
   FROM sh GROUP BY doc_id),
-bands AS (
+bands AS MATERIALIZED (
   SELECT doc_id, 0 AS band, md5(m0 || m1) AS bkey FROM sig
   UNION ALL SELECT doc_id, 1, md5(m2 || m3) FROM sig
   UNION ALL SELECT doc_id, 2, md5(m4 || m5) FROM sig
@@ -690,7 +695,7 @@ drops AS (SELECT DISTINCT a.doc_id FROM bands a JOIN bands b
           ON a.band = b.band AND a.bkey = b.bkey AND b.doc_id < a.doc_id),
 dedup AS (SELECT q.* FROM quality q LEFT JOIN drops d ON q.doc_id = d.doc_id
           WHERE d.doc_id IS NULL),
-scrubbed AS (
+scrubbed AS MATERIALIZED (
   SELECT doc_id,
          regexp_replace(regexp_replace(text,
              '[A-Za-z0-9._]+@[A-Za-z0-9.-]+', '<EMAIL>', 'g'),
@@ -713,27 +718,27 @@ tsh AS (SELECT DISTINCT doc_id,
           t[i+4] || ' ' || t[i+5] || ' ' || t[i+6] || ' ' || t[i+7] AS shingle
         FROM tidx),
 hits AS (SELECT DISTINCT tsh.doc_id FROM tsh JOIN bench8 USING (shingle)),
-decon AS (SELECT s.* FROM scrubbed s LEFT JOIN hits h ON s.doc_id = h.doc_id
+decon AS MATERIALIZED (SELECT s.* FROM scrubbed s LEFT JOIN hits h ON s.doc_id = h.doc_id
           WHERE h.doc_id IS NULL AND s.doc_id % 20 <> 0),
-dtok AS (SELECT doc_id, lang, list_filter(string_split(text, ' '), x -> x <> '') AS tk FROM decon),
+dtok AS MATERIALIZED (SELECT doc_id, lang, list_filter(string_split(text, ' '), x -> x <> '') AS tk FROM decon),
 grams AS (
   SELECT doc_id, lang, tk[i] AS gram FROM dtok, unnest(generate_series(1, len(tk))) AS u(i)
   UNION ALL
   SELECT doc_id, lang, tk[i] || ' ' || tk[i+1] FROM dtok, unnest(generate_series(1, len(tk) - 1)) AS u(i)),
-b AS (SELECT doc_id, lang,
+b AS MATERIALIZED (SELECT doc_id, lang,
              CAST(('0x' || substr(md5(gram), 1, 12)) AS BIGINT) % 1024 AS bucket
       FROM grams),
-t_hist AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS t_b FROM b WHERE lang = 'en' GROUP BY 1),
-r_hist AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS r_b FROM b WHERE lang <> 'en' GROUP BY 1),
-tot AS (SELECT (SELECT CAST(SUM(t_b) AS BIGINT) FROM t_hist) AS tt,
+t_hist AS MATERIALIZED (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS t_b FROM b WHERE lang = 'en' GROUP BY 1),
+r_hist AS MATERIALIZED (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS r_b FROM b WHERE lang <> 'en' GROUP BY 1),
+tot AS MATERIALIZED (SELECT (SELECT CAST(SUM(t_b) AS BIGINT) FROM t_hist) AS tt,
                (SELECT CAST(SUM(r_b) AS BIGINT) FROM r_hist) AS rt),
-wts AS (SELECT COALESCE(r.bucket, t.bucket) AS bucket,
+wts AS MATERIALIZED (SELECT COALESCE(r.bucket, t.bucket) AS bucket,
                CAST(1000000 * (COALESCE(t.t_b, 0) + 1) * (rt + 1024)
                     // ((COALESCE(r.r_b, 0) + 1) * (tt + 1024)) - 1000000 AS BIGINT) AS w_b
         FROM r_hist r FULL OUTER JOIN t_hist t ON r.bucket = t.bucket, tot),
 c AS (SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS c FROM b WHERE lang <> 'en' GROUP BY 1, 2),
-sc AS (SELECT doc_id, CAST(SUM(c * w_b) AS BIGINT) AS dsir_score FROM c JOIN wts USING (bucket) GROUP BY 1),
-selected AS (SELECT doc_id FROM (
+sc AS MATERIALIZED (SELECT doc_id, CAST(SUM(c * w_b) AS BIGINT) AS dsir_score FROM c JOIN wts USING (bucket) GROUP BY 1),
+selected AS MATERIALIZED (SELECT doc_id FROM (
   SELECT doc_id, ROW_NUMBER() OVER (ORDER BY dsir_score DESC, doc_id) AS rank FROM sc) t
   WHERE rank <= 50)
 """
@@ -761,7 +766,7 @@ def _funnel_oracle(tokenizer: str = "unigram") -> str:
           WHERE t <> ''),
 bpc AS (SELECT d.doc_id, CAST(SUM(len(s.syms)) AS BIGINT) AS n_pieces
         FROM docw d JOIN s8 s ON d.word = s.word GROUP BY 1),
-tokenized AS (
+tokenized AS MATERIALIZED (
   SELECT d.doc_id, d.lang, d.n_tokens,
          CAST(COALESCE(bpc.n_pieces, 0) AS BIGINT) AS n_pieces
   FROM decon d LEFT JOIN bpc ON d.doc_id = bpc.doc_id)"""
@@ -769,7 +774,7 @@ tokenized AS (
         tok_parts = _tx.unigram_lm_oracle_sql(
             serve=True, src="decon", parts_only=True
         ) + """
-,tokenized AS (
+,tokenized AS MATERIALIZED (
   SELECT d.doc_id, d.lang, d.n_tokens,
          CAST(COALESCE(pc.n_pieces, 0) AS BIGINT) AS n_pieces
   FROM decon d LEFT JOIN pc ON d.doc_id = pc.doc_id)"""

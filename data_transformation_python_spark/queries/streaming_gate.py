@@ -2202,9 +2202,9 @@ def _stream_admission_oracle() -> str:
            COUNT(*) OVER () AS ntot
     FROM sc) t
   WHERE rnk = LEAST(50, ntot)),
-sq AS (SELECT s.doc_id, s.lang, s.n_tokens, s.text FROM scrubbed s
+sq AS MATERIALIZED (SELECT s.doc_id, s.lang, s.n_tokens, s.text FROM scrubbed s
        WHERE s.doc_id % 20 <> 0),
-stk AS (SELECT doc_id, list_filter(string_split(text, ' '),
+stk AS MATERIALIZED (SELECT doc_id, list_filter(string_split(text, ' '),
                x -> x <> '') AS tk FROM sq WHERE lang <> 'en'),
 sg AS (SELECT doc_id, tk[i] AS gram
        FROM stk, unnest(generate_series(1, len(tk))) AS u(i)

@@ -35,7 +35,8 @@ WATCHED_SUFFIXES = {".sql", ".yml", ".yaml"}
 class _Inotify:
     """Minimal ctypes binding of Linux inotify(7), used purely as a
     wake-up trigger (callers rescan; event payloads are drained, not
-    interpreted)."""
+    interpreted).  A pipe beside the inotify fd lets another thread
+    (``wake``) end a ``wait`` early."""
 
     #: MODIFY | CLOSE_WRITE | CREATE | DELETE | MOVED_FROM | MOVED_TO
     #: | DELETE_SELF
@@ -47,6 +48,9 @@ class _Inotify:
         if fd < 0:
             raise OSError(ctypes.get_errno(), "inotify_init1 failed")
         self.fd = fd
+        self._wake_r, self._wake_w = os.pipe()
+        self._lock = threading.Lock()  # wake vs close
+        self._closed = False
         self._watched: set[str] = set()
         self.add_watches(root)
 
@@ -66,10 +70,10 @@ class _Inotify:
 
     def wait(self, timeout: float) -> bool:
         """Block up to ``timeout`` seconds for any filesystem event
-        under the watched tree; drain the fd and report whether
-        anything fired."""
-        ready, _, _ = select.select([self.fd], [], [], timeout)
-        if not ready:
+        under the watched tree, or until ``wake``; drain the fd and
+        report whether an event fired."""
+        ready, _, _ = select.select([self.fd, self._wake_r], [], [], timeout)
+        if self.fd not in ready:
             return False
         try:
             os.read(self.fd, 65536)
@@ -77,11 +81,19 @@ class _Inotify:
             pass
         return True
 
+    def wake(self) -> None:
+        """End a ``wait`` in progress (and every later one) at once."""
+        with self._lock:
+            if not self._closed:
+                os.write(self._wake_w, b"x")
+
     def close(self) -> None:
-        try:
-            os.close(self.fd)
-        except OSError:
-            pass
+        with self._lock:
+            if self._closed:
+                return
+            self._closed = True
+            for fd in (self.fd, self._wake_r, self._wake_w):
+                os.close(fd)
 
 
 class ModelWatcher:
@@ -154,30 +166,44 @@ class ModelWatcher:
         self._snapshot = self._scan()
 
         def _loop():
-            while not self._stop.is_set():
+            try:
+                self._watch()
+            finally:
+                # the loop owns the fd once started: closing it from
+                # stop() while a wait is in progress would leave this
+                # thread selecting on a dead (or reused) descriptor
                 if self._inotify is not None:
-                    if self._inotify.wait(self.poll_interval):
-                        # editors write in bursts — let the burst land,
-                        # then run ONE diff over the settled tree.
-                        # Watches for any NEW directories are added
-                        # BEFORE the diff: a file written into a fresh
-                        # directory after the diff then still raises an
-                        # event on the new watch (adding after the diff
-                        # would leave a window where it raises nothing).
-                        time.sleep(0.05)
-                        self._inotify.wait(0)  # drain the burst tail
-                        self._inotify.add_watches(self.models_dir)
-                        self.poll_once()
-                else:
-                    time.sleep(self.poll_interval)
-                    self.poll_once()
+                    self._inotify.close()
 
         self._thread = threading.Thread(target=_loop, daemon=True)
         self._thread.start()
 
+    def _watch(self) -> None:
+        while not self._stop.is_set():
+            if self._inotify is not None:
+                if self._inotify.wait(self.poll_interval):
+                    # editors write in bursts — let the burst land,
+                    # then run ONE diff over the settled tree.
+                    # Watches for any NEW directories are added
+                    # BEFORE the diff: a file written into a fresh
+                    # directory after the diff then still raises an
+                    # event on the new watch (adding after the diff
+                    # would leave a window where it raises nothing).
+                    time.sleep(0.05)
+                    self._inotify.wait(0)  # drain the burst tail
+                    self._inotify.add_watches(self.models_dir)
+                    self.poll_once()
+            elif not self._stop.wait(self.poll_interval):
+                self.poll_once()
+
     def stop(self) -> None:
+        """End the loop; it closes the inotify fd on its way out (here
+        if the loop never started)."""
         self._stop.set()
-        if self._thread:
-            self._thread.join(timeout=5)
+        if self._thread is None:
+            if self._inotify is not None:
+                self._inotify.close()
+            return
         if self._inotify is not None:
-            self._inotify.close()
+            self._inotify.wake()
+        self._thread.join(timeout=5)

@@ -5,13 +5,17 @@ from __future__ import annotations
 
 import json
 import shutil
+from pathlib import Path
 
 import pytest
 from click.testing import CliRunner
 
+from data_transformation_python_spark import testing
 from data_transformation_python_spark.cli import _parse_vars, cli
+from data_transformation_python_spark.config import load_config
+from data_transformation_python_spark.state import create_state_manager
 
-EXAMPLE = "/root/repo/example_project"
+EXAMPLE = Path(__file__).resolve().parents[1] / "example_project"
 
 
 @pytest.fixture()
@@ -122,3 +126,79 @@ def test_cli_compact_sized_mode_registered():
     r = CliRunner().invoke(cli, ["compact", "--help"])
     assert r.exit_code == 0
     assert "--target-file-mb" in r.output and "--cluster-by" in r.output
+
+
+def _dq_lines(output: str) -> list[list[str]]:
+    return [ln.split("\t") for ln in output.splitlines() if ln.count("\t") == 3]
+
+
+def test_cli_test_output_order_and_exit_code(proj, monkeypatch):
+    """Sorted models, schema.yml order within a model, then the custom
+    tests, however many tables run at once; exit code 1 on any failure."""
+    r0 = CliRunner().invoke(cli, ["--project-dir", proj, "run-all"])
+    assert r0.exit_code == 0, r0.output
+    r = CliRunner().invoke(cli, ["--project-dir", proj, "test"])
+    assert r.exit_code == 0, r.output
+    assert [ln[:3] for ln in _dq_lines(r.output)] == [
+        ["gold_daily_revenue", "volume_anomaly", "-"],
+        ["gold_daily_revenue", "not_null", "order_date"],
+        ["silver_orders", "volume_anomaly", "-"],
+        ["silver_orders", "unique", "order_id"],
+        ["silver_orders", "not_null", "order_id"],
+        ["silver_orders", "accepted_values", "status"],
+        ["silver_orders", "range", "amount"],
+        ["custom", "no_negative_revenue", "-"],
+    ]
+    assert all(ln[3] == "PASS" for ln in _dq_lines(r.output))
+    (Path(proj) / "tests" / "always_fails.sql").write_text("SELECT 2 AS failed_rows")
+    monkeypatch.setattr(testing, "TEST_THREADS", 1)
+    serial = CliRunner().invoke(cli, ["--project-dir", proj, "test"])
+    assert serial.exit_code == 1, serial.output
+    assert _dq_lines(serial.output)[-2:] == [  # custom tests in file order
+        ["custom", "always_fails", "-", "FAIL(2)"],
+        ["custom", "no_negative_revenue", "-", "PASS"],
+    ]
+    monkeypatch.undo()
+    r = CliRunner().invoke(cli, ["--project-dir", proj, "test"])
+    assert r.exit_code == 1
+    assert r.output == serial.output
+
+
+def test_cli_test_keeps_volume_history(proj, spark):
+    """`test` saves the volume_anomaly history it records: a table that
+    tripled since the last `test` fails on the next one."""
+    r0 = CliRunner().invoke(cli, ["--project-dir", proj, "run-all"])
+    assert r0.exit_code == 0, r0.output
+    r1 = CliRunner().invoke(cli, ["--project-dir", proj, "test", "--model", "silver_orders"])
+    assert ["silver_orders", "volume_anomaly", "-", "PASS"] in _dq_lines(r1.output)
+    rows = spark.table("analytics.silver_orders")
+    rows.unionAll(rows).localCheckpoint().write.insertInto("analytics.silver_orders")
+    r2 = CliRunner().invoke(cli, ["--project-dir", proj, "test", "--model", "silver_orders"])
+    assert r2.exit_code == 1
+    volume = [ln[3] for ln in _dq_lines(r2.output) if ln[1] == "volume_anomaly"]
+    assert len(volume) == 1 and volume[0].startswith("FAIL("), r2.output
+
+
+def test_cli_test_keeps_state_saved_meanwhile(proj, monkeypatch):
+    """`test` writes back only the volume history it recorded: what
+    another command saved while the tests ran is kept."""
+    r0 = CliRunner().invoke(cli, ["--project-dir", proj, "run-all"])
+    assert r0.exit_code == 0, r0.output
+    cfg = load_config(proj, None)
+    run_all = testing.TestRunner.run_all
+
+    def run_all_then_save_elsewhere(self, tables):
+        results = run_all(self, tables)
+        other = create_state_manager(cfg.state_dir, cfg.env_name)
+        other.ensure("silver_orders").file_hash = "saved-meanwhile"
+        other.set_incremental_state("silver_orders", "watermark", "w1")
+        other.save()
+        return results
+
+    monkeypatch.setattr(testing.TestRunner, "run_all", run_all_then_save_elsewhere)
+    r = CliRunner().invoke(cli, ["--project-dir", proj, "test", "--model", "silver_orders"])
+    assert r.exit_code == 0, r.output
+    st = create_state_manager(cfg.state_dir, cfg.env_name).get("silver_orders")
+    assert st.file_hash == "saved-meanwhile"
+    assert st.incremental_state["watermark"] == "w1"
+    assert len(st.incremental_state[testing.AnomalyTests.VOLUME_KEY]) == 1

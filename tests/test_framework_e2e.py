@@ -6,6 +6,7 @@ local Spark against the driver's parquet fixtures."""
 from __future__ import annotations
 
 import shutil
+from pathlib import Path
 import uuid
 
 import pytest
@@ -22,7 +23,7 @@ from data_transformation_python_spark.plans import ChangeType, PlanGenerator
 from data_transformation_python_spark.state import create_state_manager
 from data_transformation_python_spark.testing import TestRunner
 
-EXAMPLE = "/root/repo/example_project"
+EXAMPLE = Path(__file__).resolve().parents[1] / "example_project"
 
 
 @pytest.fixture(scope="module")

@@ -481,6 +481,33 @@ def test_watcher_inotify_backend_is_event_driven(tmp_path):
         w.stop()
 
 
+def test_watcher_stop_ends_a_wait_in_progress(tmp_path):
+    """stop() while the loop sits in a 30-second inotify wait: the loop
+    must end at once and close the fd itself; closing the fd under a
+    waiting loop left the thread selecting on a dead descriptor
+    (``OSError: [Errno 9]``)."""
+    import threading
+    import time as _time
+
+    died = []
+    hook = threading.excepthook
+    threading.excepthook = died.append
+    try:
+        w = ModelWatcher(tmp_path, lambda ev, p: None, poll_interval=30.0)
+        assert w.backend_name == "inotify"
+        w.start()
+        _time.sleep(0.2)  # let the loop reach select()
+        t0 = _time.perf_counter()
+        w.stop()
+        assert _time.perf_counter() - t0 < 2.0
+        assert not w._thread.is_alive()
+        assert w._inotify._closed
+        w.stop()  # a second stop is a no-op
+    finally:
+        threading.excepthook = hook
+    assert not died, died
+
+
 def test_derived_table_before_set_operation_keyword():
     """A set-operation keyword after a derived table must not be
     consumed as its alias (EXCEPT swallowed -> bogus 'except'

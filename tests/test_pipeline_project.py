@@ -9,6 +9,7 @@ product, not two separately-tested halves.
 from __future__ import annotations
 
 import shutil
+from pathlib import Path
 import uuid
 
 import pytest
@@ -24,7 +25,7 @@ from data_transformation_python_spark.parser import SQLParser
 from data_transformation_python_spark.state import create_state_manager
 from data_transformation_python_spark.testing import TestRunner
 
-EXAMPLE = "/root/repo/example_pipeline"
+EXAMPLE = Path(__file__).resolve().parents[1] / "example_pipeline"
 MODELS = [
     "bronze_documents",
     "silver_signals",

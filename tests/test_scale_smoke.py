@@ -76,8 +76,9 @@ def test_bench_corpus_structure_and_determinism(spark, tmp_path):
     per-round BENCH numbers, so nondeterminism would make rounds
     incomparable."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from bench import build_scaled_corpus
 
     n = 2_000
