@@ -228,12 +228,16 @@ def validate(ctx: Context):
 @click.pass_obj
 def test(ctx: Context, model):
     """Run schema.yml + custom SQL data-quality tests, one aggregate per
-    table, several tables at a time."""
+    table, several tables at a time.  With ``--model``, only that
+    model's tests and the custom tests that read its table."""
     registry = ModelRegistry(ctx.config.models_dir)
     mx = ctx.model_executor()
     runner = TestRunner(mx.executor, registry, ctx.config.tests_dir, state=ctx.state)
     names = [model] if model else sorted(registry.models)
-    results = runner.run_all({n: mx.full_table_name(n) for n in names})
+    # a model-scoped run also runs only the custom tests that read it
+    results = runner.run_all(
+        {n: mx.full_table_name(n) for n in names}, scoped=model is not None
+    )
     # Save the volume_anomaly history this run recorded, and nothing
     # else: onto the state as it is on disk now, so what a concurrent
     # run-all or serve saved meanwhile is kept.

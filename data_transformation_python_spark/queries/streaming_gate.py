@@ -8,6 +8,7 @@ window semantics must equal DATE_TRUNC bucketing on the same data.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import uuid
 
@@ -17,11 +18,19 @@ from pyspark.sql import types as T
 
 from . import query
 from ..operators.transform import lit_long_array
+from ..streaming.jobs import run_available_now
 
 _SCOPED_CONF_KEYS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.session.timeZone",
 )
+
+# Shuffle partitions of the stateful gates.  Stateful streaming pays a
+# per-partition state-store init on EVERY micro-batch; at fixture
+# scale that fixed cost dominates (stream-stream join measured 3x
+# faster at 8 partitions, identical results).  On a real cluster size
+# this to the state volume — it is pinned by the first checkpoint.
+_STATE_PARTITIONS = "8"
 
 
 def _restores_conf(fn):
@@ -31,7 +40,7 @@ def _restores_conf(fn):
     most pin the session timezone) on the SHARED bench/parity session;
     without a restore the setting leaks into every subsequently-run
     query in the same process.  The wrapper runs after the gate's
-    ``awaitTermination`` returns, and the memory sink's rows are
+    query has finished, and the memory sink's rows are
     already materialized by then, so restoring the conf cannot change
     the returned DataFrame's values.  Keys the caller never set
     explicitly are UNSET (not reset to their current default) so the
@@ -64,6 +73,22 @@ def _restores_conf(fn):
                     pass
 
     return wrapper
+
+
+@contextlib.contextmanager
+def _sink_table(spark: SparkSession, tag: str, columns: str | None = None):
+    """The catalog table ``stream_<tag>_<hex8>`` a foreachBatch gate
+    writes into: created from ``columns`` when given (else by the
+    gate's first micro-batch), and dropped when the gate returns or
+    fails, so read its result with ``localCheckpoint`` first."""
+    target = f"stream_{tag}_{uuid.uuid4().hex[:8]}"
+    try:
+        if columns:
+            spark.sql(f"CREATE TABLE {target} ({columns}) USING parquet")
+        yield target
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {target}")
+
 
 def _match_layout_parallelism(
     stream: DataFrame, spark: SparkSession, sf_dir: str,
@@ -141,12 +166,7 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle materializes every configured partition as a task (and a
     # state dir).  200 default partitions → 200 tasks for a small
     # window count; size to the parallelism actually available.
-    # Stateful streaming pays a per-partition state-store init on
-    # EVERY micro-batch; at fixture scale that fixed cost dominates
-    # (stream-stream join measured 3x faster at 8 partitions,
-    # identical results).  On a real cluster size this to the state
-    # volume — it is pinned by the first checkpoint.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
     stream = _events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
@@ -164,16 +184,8 @@ def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name = f"stream_gate_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(agg, "gate", "complete")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -214,12 +226,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete output mode emits every session (including tails that a
     timeout-based emitter would still be holding)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Stateful streaming pays a per-partition state-store init on
-    # EVERY micro-batch; at fixture scale that fixed cost dominates
-    # (stream-stream join measured 3x faster at 8 partitions,
-    # identical results).  On a real cluster size this to the state
-    # volume — it is pinned by the first checkpoint.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
     stream = _events_stream(spark, sf_dir)
     agg = (
         stream.groupBy(
@@ -237,16 +244,8 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", "session_start", "session_end", "n_events", "total_value"
         )
     )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(agg, "sess", "complete")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -274,26 +273,13 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     production variant, ``dropDuplicatesWithinWatermark``, runs as
     its own gated query: q_stream_dedup_watermark.)"""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Stateful streaming pays a per-partition state-store init on
-    # EVERY micro-batch; at fixture scale that fixed cost dominates
-    # (stream-stream join measured 3x faster at 8 partitions,
-    # identical results).  On a real cluster size this to the state
-    # volume — it is pinned by the first checkpoint.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
     stream = _events_stream(spark, sf_dir)
     deduped = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(deduped, "dedup")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -321,12 +307,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both re-deliveries sit 1 s apart, well inside the horizon, so the
     surviving key set must equal batch DISTINCT exactly."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Stateful streaming pays a per-partition state-store init on
-    # EVERY micro-batch; at fixture scale that fixed cost dominates
-    # (stream-stream join measured 3x faster at 8 partitions,
-    # identical results).  On a real cluster size this to the state
-    # volume — it is pinned by the first checkpoint.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
     stream = _events_stream(spark, sf_dir)
     redelivered = stream.select(
         "event_id",
@@ -339,16 +320,8 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id")
     )
-    name = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(deduped, "dedup_wm")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -376,46 +349,28 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     WRITE side (the other streaming queries verify reads).  The final
     table must equal batch keep-latest-per-key exactly; (user_id, ts)
     is unique in the fixture, so the result is deterministic."""
-    import tempfile
-
     from ..streaming.jobs import foreach_batch_upsert
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Stateful streaming pays a per-partition state-store init on
-    # EVERY micro-batch; at fixture scale that fixed cost dominates
-    # (stream-stream join measured 3x faster at 8 partitions,
-    # identical results).  On a real cluster size this to the state
-    # volume — it is pinned by the first checkpoint.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
     stream = _events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", "value", "ts"
     )
-    target = f"stream_upsert_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.foreachBatch(
-            foreach_batch_upsert(target, ["user_id"], spark=spark)
+    with _sink_table(spark, "upsert") as target:
+        run_available_now(
+            stream, foreach_batch_upsert(target, ["user_id"], spark=spark)
         )
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="dtps_stream_upsert_ckpt_"),
+        return (
+            spark.table(target)
+            .select(
+                "user_id",
+                "event_id",
+                "event_type",
+                F.col("value").cast("decimal(18,4)").cast("double").alias("value"),
+                "ts",
+            )
+            .localCheckpoint(eager=True)
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    out = (
-        spark.table(target)
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.col("value").cast("decimal(18,4)").cast("double").alias("value"),
-            "ts",
-        )
-        .localCheckpoint(eager=True)
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {target}")
-    return out
 
 
 # --------------------------------------------------------------------------
@@ -445,12 +400,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan a 100-TB ingest wants.  State is bounded by the
     aggregation keys only (segments × types), not the join."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Stateful streaming pays a per-partition state-store init on
-    # EVERY micro-batch; at fixture scale that fixed cost dominates
-    # (stream-stream join measured 3x faster at 8 partitions,
-    # identical results).  On a real cluster size this to the state
-    # volume — it is pinned by the first checkpoint.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
     dim = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
         .select(F.col("c_custkey"), F.col("c_mktsegment").alias("mktsegment"))
@@ -463,16 +413,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    name = f"stream_dim_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(agg, "dim", "complete")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -504,12 +446,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state O(window) rather than O(stream).  The oracle is the batch
     self-join with the identical predicate."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Stateful streaming pays a per-partition state-store init on
-    # EVERY micro-batch; at fixture scale that fixed cost dominates
-    # (stream-stream join measured 3x faster at 8 partitions,
-    # identical results).  On a real cluster size this to the state
-    # volume — it is pinned by the first checkpoint.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
 
     def _side(event_type: str) -> DataFrame:
         return _events_stream(spark, sf_dir).where(
@@ -547,16 +484,8 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
         "purchase_value",
     )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(joined, "join")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -635,16 +564,8 @@ def q_stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = nb.join(F.broadcast(index), ["band", "bkey"]).groupBy(
         "new_doc_id", "corpus_doc_id"
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_shared_bands"))
-    name = f"stream_dedup_idx_{uuid.uuid4().hex[:8]}"
-    q = (
-        hits.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(hits, "dedup_idx", "complete")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -686,7 +607,7 @@ def q_stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (addition is associative), so the gate is bit-checkable: the
     merged sketch's estimates for the true top-5 users must match the
     batch oracle replay."""
-    import tempfile
+    from pyspark.sql.window import Window
 
     from ..operators import sketch as sk
 
@@ -694,50 +615,34 @@ def q_stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("token")
     )
-    target = f"stream_cms_{uuid.uuid4().hex[:8]}"
-    spark.sql(
-        f"CREATE TABLE {target} (r INT, bucket BIGINT, cnt BIGINT) USING parquet"
-    )
+    with _sink_table(spark, "cms", "r INT, bucket BIGINT, cnt BIGINT") as target:
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sk.countmin_build_tokens(batch_df).write.insertInto(target)
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            sk.countmin_build_tokens(batch_df).write.insertInto(target)
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="dtps_stream_cms_ckpt_"),
+        run_available_now(stream, _apply)
+        sketch = (
+            spark.table(target)
+            .groupBy("r", "bucket")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    sketch = (
-        spark.table(target)
-        .groupBy("r", "bucket")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
-    from pyspark.sql.window import Window
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    toks = events.select(F.col("user_id").cast("string").alias("token"))
-    w = Window.orderBy(F.desc("exact_count"), F.asc("token"))
-    top = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("exact_count"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= 5)
-        .drop("__rn")
-    )
-    out = (
-        top.join(
-            sk.countmin_estimate(sketch, top.select("token")), "token"
+        events = spark.read.parquet(f"{sf_dir}/events.parquet")
+        toks = events.select(F.col("user_id").cast("string").alias("token"))
+        w = Window.orderBy(F.desc("exact_count"), F.asc("token"))
+        top = (
+            toks.groupBy("token")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("exact_count"))
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= 5)
+            .drop("__rn")
         )
-        .select("token", "exact_count", "cms_estimate")
-        .localCheckpoint(eager=True)
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {target}")
-    return out
+        return (
+            top.join(
+                sk.countmin_estimate(sketch, top.select("token")), "token"
+            )
+            .select("token", "exact_count", "cms_estimate")
+            .localCheckpoint(eager=True)
+        )
 
 
 # --------------------------------------------------------------------------
@@ -859,16 +764,8 @@ def q_stream_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__b.cosine_sim").alias("cosine_sim"),
         )
     )
-    name = f"stream_ann_{uuid.uuid4().hex[:8]}"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(scored, "ann", "complete")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -1001,16 +898,8 @@ def q_stream_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__b.adc_d2").alias("adc_d2"),
         )
     )
-    name = f"stream_pq_{uuid.uuid4().hex[:8]}"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(scored, "pq", "complete")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -1101,16 +990,8 @@ def q_stream_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__b.bh").alias("best_hamming"),
         )
     )
-    name = f"stream_knn_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(stream, "knn")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -1163,64 +1044,48 @@ def q_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative and idempotent), so the whole row — registers summary,
     fixed-point harmonic sum, estimate — is bit-checkable against the
     batch oracle replay."""
-    import tempfile
-
     from ..operators import sketch as sk
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = _events_stream(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("token")
     )
-    target = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    spark.sql(
-        f"CREATE TABLE {target} (bucket BIGINT, rho INT) USING parquet"
-    )
+    with _sink_table(spark, "hll", "bucket BIGINT, rho INT") as target:
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sk.hll_build(batch_df, "token", (), p=10).write.insertInto(target)
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            sk.hll_build(batch_df, "token", (), p=10).write.insertInto(target)
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="dtps_stream_hll_ckpt_"),
+        run_available_now(stream, _apply)
+        merged = (
+            spark.table(target)
+            .groupBy("bucket")
+            .agg(F.max("rho").alias("rho"))
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    merged = (
-        spark.table(target)
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
-    est = sk.hll_estimate(merged, (), p=10)
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    exact = events.agg(
-        F.countDistinct(F.col("user_id").cast("string"))
-        .cast("bigint")
-        .alias("exact_distinct")
-    )
-    out = (
-        exact.join(est, F.lit(True), "inner")
-        .select(
-            "exact_distinct",
-            "v_zero",
-            "harmonic_fp",
-            "hll_estimate",
-            F.when(
-                F.abs(F.col("hll_estimate") - F.col("exact_distinct"))
-                <= 0.10 * F.col("exact_distinct"),
-                1,
-            )
-            .otherwise(0)
+        est = sk.hll_estimate(merged, (), p=10)
+        events = spark.read.parquet(f"{sf_dir}/events.parquet")
+        exact = events.agg(
+            F.countDistinct(F.col("user_id").cast("string"))
             .cast("bigint")
-            .alias("within_10pct"),
+            .alias("exact_distinct")
         )
-        .localCheckpoint(eager=True)
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {target}")
-    return out
+        return (
+            exact.join(est, F.lit(True), "inner")
+            .select(
+                "exact_distinct",
+                "v_zero",
+                "harmonic_fp",
+                "hll_estimate",
+                F.when(
+                    F.abs(F.col("hll_estimate") - F.col("exact_distinct"))
+                    <= 0.10 * F.col("exact_distinct"),
+                    1,
+                )
+                .otherwise(0)
+                .cast("bigint")
+                .alias("within_10pct"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 # --------------------------------------------------------------------------
@@ -1262,67 +1127,53 @@ def q_stream_mg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger carved micro-batches (appending per-batch θ-compressions
     instead would bound per-batch state by k but make θ depend on
     batch boundaries; documented trade-off)."""
-    import tempfile
-
     from ..operators import sketch as sk
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = _events_stream(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("item")
     )
-    target = f"stream_mg_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"CREATE TABLE {target} (item STRING, w BIGINT) USING parquet")
+    with _sink_table(spark, "mg", "item STRING, w BIGINT") as target:
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("item")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-            .write.insertInto(target)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="dtps_stream_mg_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    counts = (
-        spark.table(target)
-        .groupBy("item")
-        .agg(F.sum("w").cast("bigint").alias("w"))
-    )
-    top10 = (
-        sk._mg_compress(counts, k=32)
-        .orderBy(F.col("w").desc(), F.col("item"))
-        .limit(10)
-    )
-    out = (
-        F.broadcast(top10)
-        .join(counts.withColumnRenamed("w", "exact_cnt"), "item")
-        .select(
-            "item",
-            "w",
-            "theta",
-            "exact_cnt",
-            F.when(F.col("exact_cnt") >= F.col("w"), 1)
-            .otherwise(0)
-            .cast("bigint")
-            .alias("lower_ok"),
-            F.when(
-                F.col("exact_cnt") <= F.col("w") + F.col("theta"), 1
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                batch_df.groupBy("item")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
+                .write.insertInto(target)
             )
-            .otherwise(0)
-            .cast("bigint")
-            .alias("upper_ok"),
+
+        run_available_now(stream, _apply)
+        counts = (
+            spark.table(target)
+            .groupBy("item")
+            .agg(F.sum("w").cast("bigint").alias("w"))
         )
-        .localCheckpoint(eager=True)
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {target}")
-    return out
+        top10 = (
+            sk._mg_compress(counts, k=32)
+            .orderBy(F.col("w").desc(), F.col("item"))
+            .limit(10)
+        )
+        return (
+            F.broadcast(top10)
+            .join(counts.withColumnRenamed("w", "exact_cnt"), "item")
+            .select(
+                "item",
+                "w",
+                "theta",
+                "exact_cnt",
+                F.when(F.col("exact_cnt") >= F.col("w"), 1)
+                .otherwise(0)
+                .cast("bigint")
+                .alias("lower_ok"),
+                F.when(
+                    F.col("exact_cnt") <= F.col("w") + F.col("theta"), 1
+                )
+                .otherwise(0)
+                .cast("bigint")
+                .alias("upper_ok"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 # --------------------------------------------------------------------------
@@ -1349,38 +1200,22 @@ def q_stream_hdr_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates, with bounded state (≤ 63·64 cells per batch) and no custom
     state store.  Cell-wise sum is exactly the batch build, so served
     p50/p90/p99 bounds replay bit-identically in the batch oracle."""
-    import tempfile
-
     from ..operators import sketch as sk
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = _events_stream(spark, sf_dir).select("value")
-    target = f"stream_hdr_{uuid.uuid4().hex[:8]}"
-    spark.sql(
-        f"CREATE TABLE {target} (bucket_id BIGINT, cnt BIGINT) USING parquet"
-    )
+    with _sink_table(spark, "hdr", "bucket_id BIGINT, cnt BIGINT") as target:
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sk.hdr_build(batch_df, _STREAM_HDR_VALUE).write.insertInto(target)
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            sk.hdr_build(batch_df, _STREAM_HDR_VALUE).write.insertInto(target)
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="dtps_stream_hdr_ckpt_"),
+        run_available_now(stream, _apply)
+        merged = (
+            spark.table(target)
+            .groupBy("bucket_id")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    merged = (
-        spark.table(target)
-        .groupBy("bucket_id")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
-    out = sk.hdr_quantiles(merged, (50, 90, 99)).localCheckpoint(eager=True)
-    spark.sql(f"DROP TABLE IF EXISTS {target}")
-    return out
+        return sk.hdr_quantiles(merged, (50, 90, 99)).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -1401,52 +1236,32 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     over prefix sums, operators/selection.py) replays the batch
     trajectory bit-for-bit.  Bounded state: hours × sources rows per
     batch, no custom state store."""
-    import tempfile
-
-    from pyspark.sql import functions as F
+    from ..operators.selection import cusum_serve
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = _events_stream(spark, sf_dir).select("event_type", "ts")
-    target = f"stream_cusum_{uuid.uuid4().hex[:8]}"
-    spark.sql(
-        f"CREATE TABLE {target} (g STRING, h TIMESTAMP_NTZ, c BIGINT)"
-        " USING parquet"
-    )
+    with _sink_table(spark, "cusum", "g STRING, h TIMESTAMP_NTZ, c BIGINT") as target:
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(
-                F.col("event_type").alias("g"),
-                F.date_trunc("hour", F.col("ts"))
-                .cast("timestamp_ntz")
-                .alias("h"),
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                batch_df.select(
+                    F.col("event_type").alias("g"),
+                    F.date_trunc("hour", F.col("ts"))
+                    .cast("timestamp_ntz")
+                    .alias("h"),
+                )
+                .groupBy("g", "h")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+                .write.insertInto(target)
             )
+
+        run_available_now(stream, _apply)
+        merged = (
+            spark.table(target)
             .groupBy("g", "h")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-            .write.insertInto(target)
+            .agg(F.sum("c").cast("bigint").alias("c"))
         )
-
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="dtps_stream_cusum_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    merged = (
-        spark.table(target)
-        .groupBy("g", "h")
-        .agg(F.sum("c").cast("bigint").alias("c"))
-    )
-    from ..operators.selection import cusum_serve
-
-    out = cusum_serve(merged).localCheckpoint(eager=True)
-
-    spark.sql(f"DROP TABLE IF EXISTS {target}")
-    return out
+        return cusum_serve(merged).localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -1577,16 +1392,8 @@ def q_stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("__d").cast("bigint").alias("hamming"),
         )
     )
-    name = f"stream_image_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        hits.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(hits, "image_dedup", "complete")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -1703,17 +1510,9 @@ def q_stream_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.sum("__s").cast("bigint").alias("score_q"))
     )
-    name = f"stream_bm25_{uuid.uuid4().hex[:8]}"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    table, _ = run_available_now(scored, "bm25", "complete")
     return (
-        spark.table(name)
+        table
         .groupBy("query_id")
         .agg(
             F.max(
@@ -1821,18 +1620,10 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(score).alias("dsir_score"),
         )
     )
-    name = f"stream_dsir_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    table, _ = run_available_now(stream, "dsir")
     w = Window.orderBy(F.desc("dsir_score"), F.asc("doc_id"))
     return (
-        spark.table(name)
+        table
         .orderBy(F.desc("dsir_score"), F.asc("doc_id"))
         .limit(20)
         .withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -1888,16 +1679,8 @@ def q_stream_lr_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = quality_classifier_serve(
         stream, weights, bias=W.get(-1, 0), n_buckets=1024
     )
-    name = f"stream_lr_{uuid.uuid4().hex[:8]}"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(scored, "lr")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -1937,16 +1720,8 @@ def q_stream_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(ex.synth_html_expr("text", "doc_id", "spark")).alias("html"),
     )
     out = ex.html_extract(pages)
-    name = f"stream_html_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(out, "html")
+    return table
 
 
 def _stream_html_dirty_oracle() -> str:
@@ -1982,16 +1757,8 @@ def q_stream_html_extract_dirty(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("html"),
     )
     out = ex.html_extract(pages, dirty=True)
-    name = f"stream_htmld_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(out, "htmld")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -2031,16 +1798,8 @@ def q_stream_unigram_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir,
     )
     out = tx.unigram_tokenize_serve(stream, neg2)
-    name = f"stream_ulm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    table, _ = run_available_now(out, "ulm")
+    return table
 
 
 # --------------------------------------------------------------------------
@@ -2292,16 +2051,8 @@ def q_stream_funnel_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir,
         )
         admitted = _adm_stream_admitted(stream, indexes, score, cs, cd)
-        name = f"stream_adm_{uuid.uuid4().hex[:8]}"
-        q = (
-            admitted.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.table(name)
+        table, _ = run_available_now(admitted, "adm")
+        return table
     finally:
         for ix in indexes:
             ix.unpersist()

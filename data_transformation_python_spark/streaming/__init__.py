@@ -10,10 +10,12 @@ package provides the natural Spark upgrades:
   merge operators (`merge_stream`)
 - custom stateful sessionization via ``applyInPandasWithState``
   (`sessionize`)
+- one availableNow runner for every query above (`run_available_now`)
 """
 
 from .jobs import (  # noqa: F401
     foreach_batch_upsert,
+    run_available_now,
     sessionize,
     stream_source,
     windowed_counts,

@@ -12,18 +12,30 @@ Design notes for scale:
 - Sessionization uses ``applyInPandasWithState`` with per-key state:
   the canonical custom-stateful-operator pattern when built-in
   ``session_window`` semantics don't fit.
+- ``run_available_now`` is the one place a query is started and
+  awaited, so a run that does not finish fails loudly instead of
+  handing back whatever its sink holds so far.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-from collections.abc import Iterator
+import tempfile
+import uuid
+from collections.abc import Callable, Iterator
+from contextlib import ExitStack
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# The bound on one availableNow run: the largest any caller used
+# (the admission gate's scaling sweep), so no run that finished before
+# the bound was shared now times out.
+AVAILABLE_NOW_TIMEOUT_S = 600
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -49,6 +61,55 @@ def stream_source(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(path)
+
+
+def run_available_now(
+    df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    mode: str = "append",
+) -> tuple[DataFrame | None, StreamingQuery]:
+    """Run the streaming ``df`` under an availableNow trigger until it
+    has drained its source; return ``(table, query)``.
+
+    ``sink`` is either a tag or a ``foreachBatch`` function:
+
+    - a tag writes to a memory sink named ``stream_<tag>_<hex8>`` in
+      ``mode`` (append or complete), and ``table`` is that sink;
+    - a function runs on every micro-batch, and ``table`` is None.
+      Its checkpoint is a temporary directory, removed once the query
+      has ended.
+
+    The finished ``query`` keeps its ``recentProgress``.  A failed
+    query raises through ``awaitTermination``; one that is still
+    running after ``AVAILABLE_NOW_TIMEOUT_S`` is stopped and raises
+    ``TimeoutError``, never a partial table."""
+    with ExitStack() as stack:
+        writer = df.writeStream
+        name = None
+        if callable(sink):
+            checkpoint = stack.enter_context(
+                tempfile.TemporaryDirectory(
+                    prefix="dtps_stream_ckpt_", ignore_cleanup_errors=True
+                )
+            )
+            writer = writer.foreachBatch(sink).option(
+                "checkpointLocation", checkpoint
+            )
+        else:
+            name = f"stream_{sink}_{uuid.uuid4().hex[:8]}"
+            writer = writer.format("memory").queryName(name).outputMode(mode)
+        q = writer.trigger(availableNow=True).start()
+        try:
+            finished = q.awaitTermination(AVAILABLE_NOW_TIMEOUT_S)
+        finally:
+            if q.isActive:
+                q.stop()
+        if not finished:
+            raise TimeoutError(
+                f"availableNow query {name or q.id} did not finish in"
+                f" {AVAILABLE_NOW_TIMEOUT_S}s; last progress: {q.lastProgress}"
+            )
+    return (df.sparkSession.table(name) if name else None), q
 
 
 def windowed_counts(
@@ -141,14 +202,17 @@ SESSION_STATE_SCHEMA = T.StructType(
 )
 
 
+_EPOCH, _MS = dt.datetime(1970, 1, 1), dt.timedelta(milliseconds=1)
+
+
 def _session_fn(
     key: tuple,
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """Per-user session accumulator: a session closes after
-    ``gap_seconds`` of inactivity (processing-time timeout closes the
-    tail session)."""
+    """Per-user session accumulator: a session closes after ``gap`` of
+    event-time inactivity; the tail session closes once the watermark
+    passes its last event plus the gap (event-time timeout)."""
     gap = dt.timedelta(seconds=1800)
     if state.hasTimedOut:
         start, last, n, total = state.get
@@ -183,7 +247,10 @@ def _session_fn(
         n += 1
         total += float(value)
     state.update((start, last, n, total))
-    state.setTimeoutDuration(60_000)
+    # ``last`` is a naive wall time in the session zone (UTC, pinned by
+    # ``session.py``); a naive datetime handed to ``setTimeoutTimestamp``
+    # would be read in the worker's local zone instead, so pass epoch ms.
+    state.setTimeoutTimestamp((last + gap - _EPOCH) // _MS)
     if out:
         yield pd.DataFrame(
             {
@@ -198,11 +265,21 @@ def _session_fn(
 
 def sessionize(events: DataFrame) -> DataFrame:
     """Custom stateful sessionization over a stream (grouped map with
-    state) — emits a row per *closed* session."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _session_fn,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    state) — emits a row per *closed* session.
+
+    Timeouts are event-time under a watermark of one session gap: a
+    processing-time timeout makes every trigger ask for another
+    no-data batch, so an availableNow run over it never ends.  The
+    watermark drops events that arrive more than 30 minutes behind the
+    latest event seen."""
+    return (
+        events.withWatermark("ts", "30 minutes")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _session_fn,
+            outputStructType=SESSION_OUTPUT_SCHEMA,
+            stateStructType=SESSION_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )

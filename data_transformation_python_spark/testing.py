@@ -22,6 +22,9 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from .parser import SQLParser
+from .sqlvars import substitute_variables
+
 # tests that count the rows failing a row predicate (_failing_rows)
 _ROW_TESTS = ("not_null", "accepted_values", "range")
 # tables TestRunner.run_all tests at once (run-all's default --parallelism)
@@ -269,27 +272,50 @@ class TestRunner:
         except Exception as e:
             return _error(model, test, column, e)
 
-    def run_all(self, tables: dict[str, str]) -> list[TestResult]:
+    def run_all(
+        self, tables: dict[str, str], scoped: bool = False
+    ) -> list[TestResult]:
         """``run_model_tests`` for every ``{model: table}`` and the
         custom SQL tests, ``TEST_THREADS`` batches at a time over the
         shared session.  Results come in ``tables`` order, then the
-        custom tests, whatever order the batches finish in."""
+        custom tests, whatever order the batches finish in.  With
+        ``scoped``, only the custom tests that read one of ``tables``
+        run."""
+        reads = set(tables.values()) if scoped else None
         with ThreadPoolExecutor(max_workers=TEST_THREADS) as pool:
             batches = [
                 pool.submit(self.run_model_tests, model, table)
                 for model, table in tables.items()
             ]
-            batches.append(pool.submit(self.run_custom_sql_tests))
+            batches.append(pool.submit(self.run_custom_sql_tests, None, reads))
             return [r for b in batches for r in b.result()]
 
     # -- custom SQL tests (T6 — implemented here) ----------------------
-    def run_custom_sql_tests(self, variables: dict | None = None) -> list[TestResult]:
+    def _reads_any(self, sql: str, variables: dict | None, tables: set[str]) -> bool:
+        """Whether the rendered ``sql`` reads one of ``tables`` (an
+        unqualified reference is taken to be in the executor's
+        database)."""
+        db = self.executor.database
+        refs = SQLParser.extract_table_refs(
+            substitute_variables(sql, variables, strict=False)
+        )
+        qualified = {(r if "." in r else f"{db}.{r}").lower() for r in refs}
+        return not qualified.isdisjoint(t.lower() for t in tables)
+
+    def run_custom_sql_tests(
+        self, variables: dict | None = None, reads: set[str] | None = None
+    ) -> list[TestResult]:
+        """Every ``tests/*.sql`` file, or with ``reads`` only those
+        that read one of those tables."""
         results: list[TestResult] = []
         if not self.tests_dir or not self.tests_dir.exists():
             return results
         for f in sorted(self.tests_dir.glob("*.sql")):
             try:
-                rows = self.executor.execute_query(f.read_text(), variables)
+                sql = f.read_text()
+                if reads is not None and not self._reads_any(sql, variables, reads):
+                    continue
+                rows = self.executor.execute_query(sql, variables)
                 first = list(rows[0].values())[0] if rows else 0
                 failed = int(first or 0)
                 results.append(

@@ -104,12 +104,12 @@ def sweep_stream_admission(sizes_m: list[int] | None = None) -> list[dict]:
     floor (one availableNow micro-batch per run)."""
     import shutil
     import tempfile
-    import uuid
 
     from data_transformation_python_spark.queries.streaming_gate import (
         _adm_batch_artifacts,
         _adm_stream_admitted,
     )
+    from data_transformation_python_spark.streaming import run_available_now
 
     sizes_m = sizes_m or [10_000, 20_000, 40_000]
     spark = get_spark()
@@ -148,19 +148,11 @@ def sweep_stream_admission(sizes_m: list[int] | None = None) -> list[dict]:
                     admitted = _adm_stream_admitted(
                         stream, indexes, score, cs, cd
                     )
-                    name = f"sweep_adm_{uuid.uuid4().hex[:8]}"
                     t0 = time.perf_counter()
-                    q = (
-                        admitted.writeStream.format("memory")
-                        .queryName(name)
-                        .outputMode("append")
-                        .trigger(availableNow=True)
-                        .start()
-                    )
-                    q.awaitTermination(600)
+                    table, q = run_available_now(admitted, "sweep_adm")
                     ts.append(time.perf_counter() - t0)
-                    n_admitted = spark.table(name).count()
-                    spark.catalog.dropTempView(name)
+                    n_admitted = table.count()
+                    spark.catalog.dropTempView(q.name)
                 if not 0 < n_admitted <= n:
                     raise RuntimeError(
                         f"admission sweep processed nothing at {n} docs"

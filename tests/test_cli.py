@@ -164,6 +164,20 @@ def test_cli_test_output_order_and_exit_code(proj, monkeypatch):
     assert r.output == serial.output
 
 
+def test_cli_test_model_runs_only_the_custom_tests_reading_it(proj):
+    """`test --model M` runs the custom tests that read M's table and
+    no others; the example project's one custom test reads
+    gold_daily_revenue."""
+    (Path(proj) / "tests" / "reads_nothing.sql").write_text("SELECT 0 AS failed_rows")
+
+    def custom(*args):
+        r = CliRunner().invoke(cli, ["--project-dir", proj, "test", *args])
+        return [ln[1] for ln in _dq_lines(r.output) if ln[0] == "custom"]
+
+    assert custom("--model", "silver_orders") == []
+    assert custom("--model", "gold_daily_revenue") == ["no_negative_revenue"]
+
+
 def test_cli_test_keeps_volume_history(proj, spark):
     """`test` saves the volume_anomaly history it records: a table that
     tripled since the last `test` fails on the next one."""
@@ -187,8 +201,8 @@ def test_cli_test_keeps_state_saved_meanwhile(proj, monkeypatch):
     cfg = load_config(proj, None)
     run_all = testing.TestRunner.run_all
 
-    def run_all_then_save_elsewhere(self, tables):
-        results = run_all(self, tables)
+    def run_all_then_save_elsewhere(self, tables, **kw):
+        results = run_all(self, tables, **kw)
         other = create_state_manager(cfg.state_dir, cfg.env_name)
         other.ensure("silver_orders").file_hash = "saved-meanwhile"
         other.set_incremental_state("silver_orders", "watermark", "w1")

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 from data_transformation_python_spark.streaming import (
     foreach_batch_upsert,
+    jobs,
+    run_available_now,
     sessionize,
     stream_source,
     windowed_counts,
@@ -24,13 +26,6 @@ def _write_batch(spark, path, rows):
     spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(str(path))
-
-
-def _run_available_now(q_builder, timeout=120):
-    q = q_builder()
-    q.awaitTermination(timeout)
-    assert not q.isActive or q.stop() is None
-    return q
 
 
 import datetime as dt  # noqa: E402
@@ -54,18 +49,10 @@ def test_windowed_counts_stream(spark, tmp_path):
     )
     events = stream_source(spark, str(src))
     agg = windowed_counts(events, window="10 minutes", watermark="1 hour")
-    name = f"win_{uuid.uuid4().hex[:6]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    table, _ = run_available_now(agg, "win", "complete")
     out = {
         (r["window_start"].isoformat(), r["event_type"]): r["n_events"]
-        for r in spark.table(name).collect()
+        for r in table.collect()
     }
     assert out[("2024-01-01T10:00:00", "click")] == 2
     assert out[("2024-01-01T10:10:00", "view")] == 1
@@ -86,23 +73,7 @@ def test_foreach_batch_upsert(spark, tmp_path):
                 (2, _ts("2024-01-01 10:01:00"), 2, "signup", 1.0),
             ],
         )
-        events = stream_source(spark, str(src), max_files_per_trigger=1)
-
-        def start():
-            return (
-                events.writeStream.foreachBatch(
-                    foreach_batch_upsert(target, ["user_id"], spark=spark)
-                )
-                .option("checkpointLocation", str(tmp_path / "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        q = start()
-        q.awaitTermination(120)
-        assert spark.table(target).count() == 2
-
-        # batch 2: update user 1, add user 3
+        # batch 2 (the second file): update user 1, add user 3
         _write_batch(
             spark,
             src,
@@ -111,19 +82,78 @@ def test_foreach_batch_upsert(spark, tmp_path):
                 (4, _ts("2024-01-01 11:01:00"), 3, "signup", 1.0),
             ],
         )
-        q = start()
-        q.awaitTermination(120)
+        events = stream_source(spark, str(src), max_files_per_trigger=1)
+        upsert = foreach_batch_upsert(target, ["user_id"], spark=spark)
+        _, q = run_available_now(events, upsert)
+        assert [p["numInputRows"] for p in q.recentProgress] == [2, 2]
         rows = {r.user_id: r.event_type for r in spark.table(target).collect()}
         assert rows == {1: "purchase", 2: "signup", 3: "signup"}
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
+def test_available_now_timeout_raises_and_cleans_up(spark, tmp_path, monkeypatch):
+    """A run still going at the timeout is stopped and raises; it does
+    not return, and its temporary checkpoint is removed."""
+    src = tmp_path / "slow_stream"
+    src.mkdir()
+    _write_batch(spark, src, [(1, _ts("2024-01-01 10:00:00"), 1, "click", 1.0)])
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(jobs.tempfile, "tempdir", str(tmp))
+    monkeypatch.setattr(jobs, "AVAILABLE_NOW_TIMEOUT_S", 0.5)
+
+    def slow(batch_df, batch_id):
+        time.sleep(3)
+
+    t0 = time.perf_counter()
+    with pytest.raises(TimeoutError, match="did not finish"):
+        run_available_now(stream_source(spark, str(src)), slow)
+    assert time.perf_counter() - t0 < 10
+    assert spark.streams.active == []
+    assert list(tmp.iterdir()) == []
+
+
+class _StubState:
+    """The slice of ``GroupState`` that ``_session_fn`` touches."""
+
+    hasTimedOut = exists = False
+
+    def update(self, value):
+        self.value = value
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
+
+
+def test_session_timeout_is_epoch_ms_whatever_the_host_zone(monkeypatch):
+    """Event times reach ``_session_fn`` as naive UTC wall times; the
+    timeout must be last event + gap in UTC epoch ms, not shifted by
+    the worker's local zone."""
+    import pandas as pd
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        state = _StubState()
+        batch = pd.DataFrame(
+            {"ts": [pd.Timestamp("2024-01-01 12:00:00")], "value": [5.0]}
+        )
+        assert list(jobs._session_fn((1,), iter([batch]), state)) == []
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    expected = dt.datetime(2024, 1, 1, 12, 30, tzinfo=dt.timezone.utc)
+    assert state.timeout_ms == int(expected.timestamp() * 1000)
+
+
 def test_stateful_sessionize(spark, tmp_path):
     src = tmp_path / "sess_stream"
     src.mkdir()
-    # user 1: two sessions separated by > 30min; second session stays
-    # open (only closed sessions are emitted)
+    # user 1: two sessions separated by > 30min.  User 2's event moves
+    # the watermark (30 min) to 13:30, past user 1's tail session end
+    # plus the gap (12:30), so that session times out and is emitted;
+    # user 2's own session stays open (only closed sessions are emitted)
     _write_batch(
         spark,
         src,
@@ -131,34 +161,17 @@ def test_stateful_sessionize(spark, tmp_path):
             (1, _ts("2024-01-01 10:00:00"), 1, "click", 1.0),
             (2, _ts("2024-01-01 10:10:00"), 1, "click", 2.0),
             (3, _ts("2024-01-01 12:00:00"), 1, "click", 5.0),
+            (4, _ts("2024-01-01 14:00:00"), 2, "click", 7.0),
         ],
     )
     events = stream_source(spark, str(src))
     sessions = sessionize(events)
-    name = f"sess_{uuid.uuid4().hex[:6]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table(name).collect()
-    # the gap-closed session is always emitted; the open tail session
-    # may additionally flush via the timeout path when the
-    # availableNow query drains
-    assert len(rows) in (1, 2), rows
-    closed = [r for r in rows if r["session_end"] == _ts("2024-01-01 10:10:00")]
-    assert len(closed) == 1
-    s = closed[0]
-    assert s["n_events"] == 2
-    assert s["total_value"] == 3.0
-    assert s["session_start"] == _ts("2024-01-01 10:00:00")
-    if len(rows) == 2:
-        tail = next(r for r in rows if r is not s)
-        assert tail["session_start"] == _ts("2024-01-01 12:00:00")
-        assert tail["n_events"] == 1
+    table, _ = run_available_now(sessions, "sess")
+    rows = {tuple(r) for r in table.collect()}
+    assert rows == {
+        (1, _ts("2024-01-01 10:00:00"), _ts("2024-01-01 10:10:00"), 2, 3.0),
+        (1, _ts("2024-01-01 12:00:00"), _ts("2024-01-01 12:00:00"), 1, 5.0),
+    }
 
 
 def test_streaming_state_under_rocksdb_provider(spark, sf_dir):
